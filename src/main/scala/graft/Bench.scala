@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -16,7 +17,10 @@ import org.apache.spark.sql.SparkSession
   * startup cost). The cache is cleared between queries so no query reads
   * another's cached data; shared on-disk fixtures (SparkEntry.Fixtures)
   * are built on the first run, so the min measures the operator, not
-  * fixture setup.
+  * fixture setup. Arguments select rows, so
+  * `SPARK_GRAFT_BENCH_REPEATS=3 runMain graft.Bench <query>` is the warm
+  * steady-state timing of one row; bench_last.json splits each row's
+  * fastest run into build / analysis / optimization / planning / exec.
   *
   * SELF-ADJUDICATION: at 150 queries the shared-JVM min-of-2 sweep no
   * longer yields per-query-reliable numbers (BENCH_r08: d_bm25 6.55 s
@@ -42,35 +46,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Round 20 (guide §2.2, VERDICT r19 item 2): the AQE coalescing
-      // knobs are EXPLICIT and env-overridable, with defaults equal to
-      // Spark's own — size-first coalescing (parallelismFirst=false)
-      // was implemented and MEASURED at four settings and REJECTED as a
-      // local default: this engine's hot reduce stages are CPU-dense
-      // and byte-light (array_intersect verifies, banded-bucket pair
-      // loops), so any size-based target serializes them
-      // (d_containment_prefix 2.4 → 2.8-4.7 s across every advisory
-      // size; OPTIMIZATION_r20.md §3 has the table). A production
-      // deployment whose stages ARE byte-proportional (the 100 TB
-      // shuffle-bound regime) can turn size-first coalescing on via
-      // these env vars without a code change. Do NOT flip the default
-      // back without re-running that experiment.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_BYTES", "1m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // JVM/codegen/shuffle/parquet warmup outside the timed region — the
     // alphabetically-first query otherwise absorbs several seconds of
@@ -90,17 +66,39 @@ object Bench {
     // transiently-failing query must never masquerade as a fast pass under
     // min-of-N (r5 ADVICE). All repeats failing → the query reports +Inf,
     // which JSON-serializes as a loud "inf" and fails any numeric gate.
+    //
+    // Each row's fastest run is also split into five parts, in ns, that
+    // partition its wall time: body build (the eager jobs a composed body
+    // runs), the final frame's Catalyst analysis, optimization and
+    // planning (its QueryPlanningTracker), and execution. Analysis runs
+    // eagerly inside the body's Dataset construction, so it is carved out
+    // of the build span; optimization and planning run lazily inside
+    // toRdd, so they are carved out of the exec span. Tracker phases are
+    // millisecond-grained, so each is capped at the span it comes from.
+    val fastest = scala.collection.mutable.Map.empty[String, Array[Long]]
     def timeOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      if (ok) (System.nanoTime() - t0) / 1e9 else Double.PositiveInfinity
+      try {
+        val qe = fn(spark, sfDir).queryExecution
+        val t1 = System.nanoTime()
+        qe.toRdd.count()
+        val t2 = System.nanoTime()
+        val tracked = qe.tracker.phases
+        def part(phase: String, span: Long): Long =
+          math.min(tracked.get(phase).fold(0L)(_.durationMs * 1000000L), span)
+        val analysis = part(QueryPlanningTracker.ANALYSIS, t1 - t0)
+        val optimization = part(QueryPlanningTracker.OPTIMIZATION, t2 - t1)
+        val planning = part(QueryPlanningTracker.PLANNING, t2 - t1 - optimization)
+        if (fastest.get(name).forall(t2 - t0 < _.sum))
+          fastest(name) = Array(t1 - t0 - analysis, analysis, optimization,
+            planning, t2 - t1 - optimization - planning)
+        (t2 - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Double.PositiveInfinity
+      }
     }
     val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => selected.contains(q._1)).map { case (name, fn) =>
@@ -239,10 +237,22 @@ object Bench {
     // captured-stdout tail is end-anchored at ~2000 chars, so whole-map
     // consumers read the artifact instead of hoping the line survives
     // truncation (BENCH_r16 "parsed": null — the tail never machine-
-    // parsed in any round).
+    // parsed in any round). Only the file copy carries "phases", each
+    // row's five-part split (null for a row with no successful run).
+    // Cumulative edges are rounded, not parts, so a row's printed parts
+    // sum exactly to its printed time.
+    val phasesJson = results.map { case (n, _) =>
+      "\"" + n + "\":" + fastest.get(n).fold("null") { split =>
+        val edges = split.scanLeft(0L)(_ + _).map(ns => math.round(ns / 1e6))
+        Seq("build", "analysis", "optimization", "planning", "exec")
+          .zip(edges.zip(edges.tail))
+          .map { case (k, (a, b)) => "\"" + k + "\":" + f3((b - a) / 1e3) }
+          .mkString("{", ",", "}")
+      }
+    }.mkString("\"phases\":{", ",", "},")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fullLine + "\n").getBytes("UTF-8"))
+      (line(results, phasesJson) + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     val bySlowest = results.sortBy(-_._2)

@@ -176,15 +176,9 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(GraftError.BadArgs("no op").exitCode) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .appName("graft-tdb")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(master = sys.env.get("GRAFT_MASTER"))
+    sys.env.get("GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     // The CLI boundary maps every failure to its tdb_error_str-style name
     // and a DISTINCT exit code (GraftError.classify) — scripts branch on
     // the code like they would on the reference's tdb_error.
@@ -250,8 +244,6 @@ object Main {
         s"[tdb] --threads $n noted: parallelism is managed by Spark " +
           "(executor/core config), not a per-op thread count")
     }
-    if (flags("-v").nonEmpty)
-      spark.sparkContext.setLogLevel("INFO")
     // the reference refuses multi-char delimiters up front
     // (tdbcli/main.c:217-220) — for ANY op, before the op body runs.
     // Use the RAW flag value, not one(): one() filters empty strings,
@@ -261,8 +253,13 @@ object Main {
       if (d.length != 1)
         throw GraftError.BadArgs(s"Delimiter must be one character, not '$d'")
     }
+    // -v raises the JVM-wide log level for this op only: the caller's
+    // level comes back afterwards, even when the op throws.
+    val verbose = flags("-v").nonEmpty
+    val priorLevel = org.apache.logging.log4j.LogManager.getRootLogger.getLevel
+    if (verbose) spark.sparkContext.setLogLevel("INFO")
 
-    op match {
+    try op match {
       case "make" =>
         val out = one("-o").getOrElse(throw GraftError.BadArgs("make: -o OUT required"))
         val rawFields = one("-f").map(_.split(",").toSeq).getOrElse(Nil)
@@ -637,7 +634,7 @@ object Main {
 
       case other =>
         usage(); throw GraftError.BadArgs(s"unknown op '$other'")
-    }
+    } finally if (verbose) spark.sparkContext.setLogLevel(priorLevel.name)
   }
 
   private def usage(): Unit =

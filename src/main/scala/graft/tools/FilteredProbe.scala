@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -14,12 +13,7 @@ import graft.ops.Similarity
 object FilteredProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-filtered-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 10)
     val base = Similarity.filteredKnn(emb, q, k = 3)

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.GraftPlanning
 import org.apache.spark.sql.functions._
 
 /** Scaling experiment: replicate documents/embeddings 4× (ids shifted, so
@@ -27,13 +28,7 @@ object Scale4x {
     val sfDir = args.filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.1")
     val x16 = args.contains("--x16")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val base = "/tmp/graft-scale4x"
@@ -86,7 +81,7 @@ object Scale4x {
       spark.sparkContext.addSparkListener(t)
       val t0 = System.nanoTime(); f
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // let the listener bus drain stage-completed events
+      GraftPlanning.drainListeners(spark)
       spark.sparkContext.removeSparkListener(t)
       (wall, t.w.get, t.r.get, t.droppedBuckets, t.droppedSignatures)
     }
@@ -636,6 +631,7 @@ object Scale4x {
         // one key's partition (OptimizeSkewedJoin can't see through the
         // build side's aggregate) — only the salt can. The raw-partition
         // measurement shows that structure at ladder scale.
+        val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
         if (spanCorpus) {
           spark.conf.set("spark.sql.shuffle.partitions", "128")
           spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -643,12 +639,11 @@ object Scale4x {
         val tsAndMax = Seq(d1, wt(d1), big, wt(big)).map { d =>
           maxTask.max.set(0L)
           val t = time(op(d).queryExecution.toRdd.count())
-          // listener events drain asynchronously after the job ends
-          Thread.sleep(500)
+          GraftPlanning.drainListeners(spark)
           (t, maxTask.max.get())
         }
         if (spanCorpus) {
-          spark.conf.set("spark.sql.shuffle.partitions", "32")
+          spark.conf.set("spark.sql.shuffle.partitions", priorParts)
           spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
         }
         val ts = tsAndMax.map(_._1)
@@ -1295,14 +1290,7 @@ object Scale4x {
         spark.sparkContext.addSparkListener(listener)
         try {
           val w = time(f)
-          var last = -1L
-          var stableFor = 0
-          var waited = 0
-          while (waited < 300 && stableFor < 10) {
-            Thread.sleep(100); waited += 1
-            val v = seen.values.map(_.get()).sum
-            if (v == last) stableFor += 1 else { stableFor = 0; last = v }
-          }
+          GraftPlanning.drainListeners(spark)
           (w, seen.map { case (k, v) => k -> v.get() })
         } finally spark.sparkContext.removeSparkListener(listener)
       }

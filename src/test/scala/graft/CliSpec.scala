@@ -416,6 +416,9 @@ class CliSpec extends SparkSpec {
     assert(auto.exists(_.contains(
       s"using index at $dir/db.index. Evaluating 2/8 (25.00%) trails.")), auto)
     assert(!autoOut.exists(_.contains("Evaluating")), autoOut)
+    // -v is scoped to its op: the shared JVM is back at WARN afterwards
+    assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel ===
+      org.apache.logging.log4j.Level.WARN)
     // without -v: silent on both streams (but still index-pruned)
     val (quietOut, quietErr) = capture(Seq("-i", s"$dir/db", "-F",
       "etype=e1", "-o", s"$dir/dump-quiet", "--csv-header"))
