@@ -2314,7 +2314,7 @@ object SparkEntry {
     "m_jpeg" -> ((s, dir) => {
       val imgs = docFixture(s, dir, "fx_jpegMedia")(
         Multimodal.jpegMediaFromDocuments)
-      Multimodal.decodeJpegImages(imgs, thumbSide = 2)
+      Multimodal.decodeAnyImages(imgs, thumbSide = 2)
         .select(col("media_id"), col("width"), col("height"),
           col("mean_r"), col("mean_g"), col("mean_b"))
         .orderBy("media_id")
@@ -2365,7 +2365,7 @@ object SparkEntry {
     "m_png" -> ((s, dir) => {
       val imgs = docFixture(s, dir, "fx_pngMedia")(
         Multimodal.pngMediaFromDocuments)
-      Multimodal.decodePngImages(imgs, thumbSide = 2)
+      Multimodal.decodeAnyImages(imgs, thumbSide = 2)
         .select(col("media_id"), col("width"), col("height"),
           col("mean_r"), col("mean_g"), col("mean_b"))
         .orderBy("media_id")
@@ -2401,7 +2401,7 @@ object SparkEntry {
     "m_webp" -> ((s, dir) => {
       val imgs = docFixture(s, dir, "fx_webpDecodeMedia")(
         Multimodal.webpDecodeMediaFromDocuments)
-      Multimodal.decodeWebpImages(imgs, thumbSide = 2)
+      Multimodal.decodeAnyImages(imgs, thumbSide = 2)
         .select(col("media_id"), col("width"), col("height"),
           col("mean_r"), col("mean_g"), col("mean_b"))
         .orderBy("media_id")
@@ -2522,7 +2522,7 @@ object SparkEntry {
 
     // Multimodal: animated-GIF near-dup pairing through the VIDEO
     // stack (round 17) — the image↔video bridge: composited frame
-    // hashes from gifFrameHashSets ride the SAME banded matcher as
+    // hashes from animationFrameHashSets ride the SAME banded matcher as
     // video clips (one body, spec-pinned). Planted groups: base /
     // exact copy / TRIMMED re-encode (last frame dropped — the
     // clip-trim shape, nf−1 shared frames in order) / independent;
@@ -2530,7 +2530,7 @@ object SparkEntry {
     "m_gif_dedup" -> ((s, dir) => {
       val media = docFixture(s, dir, "fx_gifDedupMedia")(
         Multimodal.gifDedupMediaFromDocuments)
-      Multimodal.gifNearDupPairs(media, minMatchedFrames = 2)
+      Multimodal.animationNearDupPairs(media, minMatchedFrames = 2)
         .select(col("id_a"), col("id_b"), col("n_matched"), col("lis"))
         .orderBy("id_a", "id_b")
     }),
@@ -2546,7 +2546,7 @@ object SparkEntry {
     "m_apng_dedup" -> ((s, dir) => {
       val media = docFixture(s, dir, "fx_apngDedupMedia")(
         Multimodal.apngDedupMediaFromDocuments)
-      Multimodal.apngNearDupPairs(media, minMatchedFrames = 2)
+      Multimodal.animationNearDupPairs(media, minMatchedFrames = 2)
         .select(col("id_a"), col("id_b"), col("n_matched"), col("lis"))
         .orderBy("id_a", "id_b")
     }),
@@ -2559,15 +2559,15 @@ object SparkEntry {
     "m_awebp_dedup" -> ((s, dir) => {
       val media = docFixture(s, dir, "fx_awebpDedupMedia")(
         Multimodal.awebpDedupMediaFromDocuments)
-      Multimodal.awebpNearDupPairs(media, minMatchedFrames = 2)
+      Multimodal.animationNearDupPairs(media, minMatchedFrames = 2)
         .select(col("id_a"), col("id_b"), col("n_matched"), col("lis"))
         .orderBy("id_a", "id_b")
     }),
 
     // Multimodal: CROSS-FORMAT animation matching (round 18) — the
     // transcode shape real crawls carry: a GIF corpus freezes into a
-    // frame-hash index (videoFrameIndexFromSets over gifFrameHashSets),
-    // and the SAME animations re-encoded as APNG and animated WebP
+    // frame-hash index (videoFrameIndexFromSets over
+    // animationFrameHashSets), and the SAME animations re-encoded as APNG and animated WebP
     // (real VP8L payloads — not one byte survives the transcode) match
     // their corpus twins through the format-agnostic frame space, all
     // nf frames in temporal order (lis = n_matched). The independent
@@ -2579,15 +2579,15 @@ object SparkEntry {
       // transcode-probe-vs-FROZEN-index; the vididx convention)
       val index = mediaMemo(s, s"animidx:$dir")(
         Multimodal.videoFrameIndexFromSets(
-          Multimodal.gifFrameHashSets(
+          Multimodal.animationFrameHashSets(
             media.filter(col("media_id") % 4 === 0 ||
               col("media_id") % 4 === 3))))
+      // one probe over both transcodes: each blob dispatches to its own
+      // container's frame decoder
       Multimodal.animationAgainstIndex(
-          Multimodal.apngFrameHashSets(
-            media.filter(col("media_id") % 4 === 1)), index)
-        .unionByName(Multimodal.animationAgainstIndex(
-          Multimodal.awebpFrameHashSets(
-            media.filter(col("media_id") % 4 === 2)), index))
+          Multimodal.animationFrameHashSets(
+            media.filter(col("media_id") % 4 === 1 ||
+              col("media_id") % 4 === 2)), index)
         .select(col("media_id"), col("match_id"), col("n_matched"),
           col("lis"))
         .orderBy("media_id", "match_id")
@@ -2747,7 +2747,7 @@ object SparkEntry {
     "m_decode" -> ((s, dir) => {
       val imgs = docFixture(s, dir, "fx_ppmMedia")(
         Multimodal.ppmMediaFromDocuments)
-      Multimodal.decodeImages(imgs, thumbSide = 2)
+      Multimodal.decodeAnyImages(imgs, thumbSide = 2)
         .select(col("media_id"), col("width"), col("height"),
           col("mean_r"), col("mean_g"))
         .orderBy("media_id")
@@ -2761,7 +2761,7 @@ object SparkEntry {
     "m_features" -> ((s, dir) => {
       val imgs = docFixture(s, dir, "fx_qoiMedia")(
         Multimodal.qoiMediaFromDocuments)
-      Multimodal.decodeQoiImages(imgs, thumbSide = 2)
+      Multimodal.decodeAnyImages(imgs, thumbSide = 2)
         .select(col("media_id"), col("width"), col("height"),
           col("mean_r"), col("mean_g"))
         .orderBy("media_id")

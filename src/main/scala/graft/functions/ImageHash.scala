@@ -12,9 +12,10 @@ import org.apache.spark.sql.types._
   * other) land within a small Hamming distance, so the text-dedup
   * band-blocking machinery applies unchanged.
   *
-  * Input: the `array<float>` thumbnail [[graft.ops.Multimodal.decodeImages]]
-  * emits — side²·3 interleaved RGB floats in [0,1], nearest-neighbor
-  * downsampled from the raster. Luma is the BT.601 weighting
+  * Input: the `array<float>` thumbnail
+  * [[graft.ops.Multimodal.decodeAnyImages]] emits — side²·3
+  * interleaved RGB floats in [0,1], nearest-neighbor downsampled from
+  * the raster. Luma is the BT.601 weighting
   * (0.299 R + 0.587 G + 0.114 B). Two public modes:
   *
   *  - `dhash` (difference hash): bit (y·side+x) is 1 iff

@@ -51,7 +51,7 @@ object Flac {
 
   /** Offset of the `fLaC` magic: 0 for a bare stream, past a
     * well-formed leading ID3v2 tag otherwise (the common real-world
-    * tagged-FLAC shape [[graft.ops.Multimodal.sniffFormat]] re-sniffs,
+    * tagged-FLAC shape [[graft.ops.MediaFormat.sniff]] re-sniffs,
     * round 19). Fails when neither applies. */
   private[graft] def streamStart(bytes: Array[Byte]): Int = {
     if (isFlac(bytes)) return 0

@@ -46,7 +46,7 @@ object Mp3 {
   /** Offset just past a leading ID3v2 tag ("ID3" ver(2) flags(1)
     * syncsafe-size(4), optional 10-byte footer), or −1 when the prefix
     * is not a well-formed in-bounds ID3v2 header. Dispatch-grade only
-    * (the [[graft.ops.Multimodal.sniffFormat]] re-sniff for
+    * (the [[graft.ops.MediaFormat.sniff]] re-sniff for
     * ID3v2-tagged FLAC — a common real-world shape the mp3-first
     * sniff order used to drop as malformed); [[meta]] keeps its own
     * loud-refusal walk. */

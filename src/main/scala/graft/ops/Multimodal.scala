@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,20 +8,18 @@ import org.apache.spark.sql.types._
   * with typed metadata, plus decode / feature-extract / resize /
   * frame-sample operators.
   *
-  * Image decode is REAL in both tiers, pure Scala, zero external codecs:
-  *  - UNCOMPRESSED: [[decodeImages]] parses binary PPM (P6) rasters end to
-  *    end (header, raster, per-channel stats, nearest-neighbor thumbnail).
-  *  - COMPRESSED: [[decodeQoiImages]] decompresses QOI streams (run-length,
-  *    64-slot color index, delta/luma chunks — the real decode loop of a
-  *    compressed format) through the same batch-per-partition contract.
-  *  - DCT-CODED: [[decodeJpegImages]] ([[Jpeg]], round 16) decodes real
-  *    baseline AND progressive JPEG — the format crawl corpora are
-  *    dominated by — from the public ITU-T T.81 spec, zero external
-  *    codecs.
-  *  - LOSSLESS-COMPRESSED: [[decodePngImages]] ([[Png]], round 17)
-  *    decodes the other top-2 crawl format across its full fixed
-  *    profile (every bit depth, every colour type, Adam7) — DEFLATE
-  *    from the JDK, everything else from the public spec.
+  * Image decode is REAL, pure Scala, zero external codecs, through ONE
+  * operator ([[decodeAnyImages]]) that dispatches each blob on its
+  * magic through the [[MediaFormat]] table:
+  *  - UNCOMPRESSED: binary PPM (P6) rasters ([[Ppm]]).
+  *  - COMPRESSED: QOI streams ([[Qoi]]: run-length, 64-slot color
+  *    index, delta/luma chunks).
+  *  - DCT-CODED: baseline AND progressive JPEG ([[Jpeg]], from the
+  *    public ITU-T T.81 spec) — the format crawl corpora are dominated
+  *    by.
+  *  - LOSSLESS-COMPRESSED: PNG ([[Png]]) across its full fixed profile
+  *    (every bit depth, every colour type, Adam7), GIF ([[Gif]]) and
+  *    lossless WebP ([[Webp]] / [[Vp8l]]).
   * MP3/H.264 PIXEL/SAMPLE decode remains out of scope for this
   * container (no codec libraries) — but their METADATA does not:
   * [[graft.ops.Mp3.meta]]/[[graft.ops.Mp4.meta]] walk the public
@@ -1123,7 +1121,37 @@ object Multimodal {
     }.toDF("media_id", "bytes")
   }
 
-  final case class VideoRow(media_id: Long, bytes: Array[Byte])
+  /** One (media_id, bytes) row — the input of every per-blob op. */
+  final case class BlobRow(media_id: Long, bytes: Array[Byte])
+
+  /** The per-blob body every decode and metadata op shares: one
+    * mapPartitions over (media_id, bytes) running `f` per blob inside a
+    * try. A blob `f` refuses drops under `skipMalformed` (CSV
+    * DROPMALFORMED) or fails the job as "malformed `what` for media_id
+    * N". `attempts` names an accumulator that counts every blob entering
+    * `f` — the decode-work audit the meta gates are judged by
+    * (ContainerMetaSpec asserts gated junk never reaches a decode; the
+    * Scale4x --metagate ladder prints the ratio). */
+  private def perBlob[T: Encoder](media: DataFrame, what: String,
+      skipMalformed: Boolean, attempts: Option[String] = None)(
+      f: (Long, Array[Byte]) => Iterator[T]): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    val acc = attempts.map(n => spark.sparkContext.longAccumulator(n))
+    media.select(col("media_id"), col("bytes")).as[BlobRow].mapPartitions { it =>
+      it.flatMap { m =>
+        try {
+          acc.foreach(_.add(1))
+          f(m.media_id, m.bytes)
+        } catch {
+          case e: Exception if skipMalformed => Iterator.empty
+          case e: Exception => throw new RuntimeException(
+            s"malformed $what for media_id ${m.media_id}", e)
+        }
+      }
+    }
+  }
+
   final case class DecodedFrame(media_id: Long, frame_idx: Int, width: Int,
       height: Int, fps: Int, mean_y: Double)
 
@@ -1134,53 +1162,29 @@ object Multimodal {
   def decodeVideoFrames(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[VideoRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val (w, h, fps, frames) = Y4m.decode(m.bytes)
-          frames.iterator.zipWithIndex.map { case (f, k) =>
-            var sum = 0L
-            var p = 0
-            while (p < w * h) { sum += f(p) & 0xff; p += 1 }
-            DecodedFrame(m.media_id, k, w, h, fps, sum.toDouble / (w * h))
-          }
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed video for media_id ${m.media_id}", e)
-        }
+    perBlob(media, "video", skipMalformed) { (id, b) =>
+      val (w, h, fps, frames) = Y4m.decode(b)
+      frames.iterator.zipWithIndex.map { case (f, k) =>
+        var sum = 0L
+        var p = 0
+        while (p < w * h) { sum += f(p) & 0xff; p += 1 }
+        DecodedFrame(id, k, w, h, fps, sum.toDouble / (w * h))
       }
     }.toDF()
   }
 
-  final case class AudioRow(media_id: Long, bytes: Array[Byte])
   final case class DecodedAudio(media_id: Long, sample_rate: Int,
       n_samples: Long, duration_ms: Long, peak: Int, mean: Double)
 
   /** PCM decode dispatch across the decodable audio containers —
-    * [[decodeAnyImages]]' audio twin (round 19): ONE [[sniffFormat]]
-    * call routes FLAC (bare or ID3v2-tagged) through the from-spec
-    * [[Flac.decode]] and everything else through the RIFF walk
-    * ([[Wav.decode]], which refuses loudly on non-WAV). The
-    * 16-bit-MONO contract mirrors [[Wav.decode]]'s exactly: a stereo
-    * or non-16-bit FLAC refuses and keeps its exact duplicates
-    * through the undecodable route, the same boundary the WAV side
-    * has always had. Lossless ⇒ a WAV↔FLAC transcode of one master
-    * returns IDENTICAL samples from either container. */
+    * [[decodeAnyImageBytes]]' audio twin: the [[MediaFormat]] entry's
+    * PCM decoder (WAV through [[Wav.decode]], FLAC — bare or
+    * ID3v2-tagged — through the from-spec [[Flac.decode]]), both held
+    * to the 16-bit-mono contract. A blob whose format has no PCM
+    * decoder refuses and keeps its exact duplicates through the
+    * undecodable route. */
   private[graft] def decodePcm16(b: Array[Byte]): (Int, Array[Short]) =
-    if (sniffFormat(b) == "flac") {
-      val p = Flac.decode(b)
-      if (p.bitsPerSample != 16)
-        throw new IllegalArgumentException(
-          s"flac: ${p.bitsPerSample}-bit stream (decode path is 16-bit)")
-      if (p.nChannels != 1)
-        throw new IllegalArgumentException(
-          s"flac: ${p.nChannels}-channel stream (decode path is mono)")
-      val s = new Array[Short](p.samples.length)
-      var i = 0
-      while (i < s.length) { s(i) = p.samples(i).toShort; i += 1 }
-      (p.sampleRate, s)
-    } else Wav.decode(b)
+    MediaFormat.decoderOf(b, "PCM")(_.pcm)(b)
 
   /** REAL audio decode + feature extraction, batch-at-a-time per partition:
     * [[decodePcm16]] dispatch (RIFF chunk walk via [[Wav.decode]] or
@@ -1193,44 +1197,31 @@ object Multimodal {
   def decodeAudio(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[AudioRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val (rate, samples) = decodePcm16(m.bytes)
-          var sum = 0L
-          var peak = 0
-          var i = 0
-          while (i < samples.length) {
-            sum += samples(i)
-            val a = math.abs(samples(i).toInt)
-            if (a > peak) peak = a
-            i += 1
-          }
-          Iterator.single(DecodedAudio(m.media_id, rate, samples.length.toLong,
-            samples.length.toLong * 1000L / rate, peak,
-            if (samples.isEmpty) 0.0 else sum.toDouble / samples.length))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed audio for media_id ${m.media_id}", e)
-        }
+    perBlob(media, "audio", skipMalformed) { (id, b) =>
+      val (rate, samples) = decodePcm16(b)
+      var sum = 0L
+      var peak = 0
+      var i = 0
+      while (i < samples.length) {
+        sum += samples(i)
+        val a = math.abs(samples(i).toInt)
+        if (a > peak) peak = a
+        i += 1
       }
+      Iterator.single(DecodedAudio(id, rate, samples.length.toLong,
+        samples.length.toLong * 1000L / rate, peak,
+        if (samples.isEmpty) 0.0 else sum.toDouble / samples.length))
     }.toDF()
   }
 
-  final case class ImageRow(media_id: Long, bytes: Array[Byte])
   final case class DecodedImage(media_id: Long, width: Int, height: Int,
       mean_r: Double, mean_g: Double, mean_b: Double, thumb: Array[Float])
 
-  /** REAL image decode + feature extraction + resize, batch-at-a-time per
-    * partition: parse the raster via `decoder`, per-channel means (exact
-    * integer sums → one IEEE division), and a `thumbSide`² nearest-neighbor
-    * RGB thumbnail normalized to [0,1]. `skipMalformed` mirrors CSV
-    * DROPMALFORMED: corrupt blobs are dropped instead of failing the job. */
-  /** The nearest-neighbor thumbnail every decode path emits — ONE
-    * definition, shared by [[decodeImagesWith]] and the fused gate+decode
-    * walk ([[mediaMetaGateDecoding]]), so the two can never produce
-    * different floats for the same raster. */
+  /** The nearest-neighbor RGB thumbnail (normalized floats) every image
+    * path emits — ONE definition, shared by [[decodeAnyImages]], the
+    * fused gate+decode walk ([[mediaMetaGateDecoding]]) and the
+    * animation frame hashes ([[animationFrameHashSets]]), so no two
+    * paths can produce different floats for the same raster. */
   private def thumbnailOf(w: Int, h: Int, raster: Array[Byte],
       thumbSide: Int): Array[Float] = {
     val thumb = new Array[Float](thumbSide * thumbSide * 3)
@@ -1252,81 +1243,6 @@ object Multimodal {
     thumb
   }
 
-  private def decodeImagesWith(media: DataFrame,
-      decoder: Array[Byte] => (Int, Int, Array[Byte]),
-      thumbSide: Int, skipMalformed: Boolean): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    // every blob entering a pixel decode counts here (one long-add per
-    // image — noise): the decode-work audit the meta-gate composition
-    // is judged by (ContainerMetaSpec asserts gated junk never reaches
-    // this, the Scale4x --metagate ladder prints the ratio), visible in
-    // the UI next to any decode stage
-    val attempts = spark.sparkContext
-      .longAccumulator("graft.image_decode_attempts")
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          attempts.add(1)
-          val (w, h, raster) = decoder(m.bytes)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var p = 0
-          while (p < raster.length) {
-            sr += raster(p) & 0xff; sg += raster(p + 1) & 0xff; sb += raster(p + 2) & 0xff
-            p += 3
-          }
-          val n = (w * h).toDouble
-          val thumb = thumbnailOf(w, h, raster, thumbSide)
-          Iterator.single(DecodedImage(m.media_id, w, h, sr / n, sg / n, sb / n, thumb))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed image for media_id ${m.media_id}", e)
-        }
-      }
-    }.toDF()
-  }
-
-  /** Binary-PPM (P6) decode — the uncompressed tier. */
-  def decodeImages(media: DataFrame, thumbSide: Int = 2,
-      skipMalformed: Boolean = true): DataFrame =
-    decodeImagesWith(media, Ppm.decode, thumbSide, skipMalformed)
-
-  /** QOI decode — the compressed tier (run-length + index + delta chunks,
-    * see [[Qoi]]). Same output contract as [[decodeImages]]. */
-  def decodeQoiImages(media: DataFrame, thumbSide: Int = 2,
-      skipMalformed: Boolean = true): DataFrame =
-    decodeImagesWith(media, Qoi.decode, thumbSide, skipMalformed)
-
-  /** JPEG decode — the DCT tier ([[Jpeg]], implemented from the public
-    * ITU-T T.81 spec; round 16): baseline/extended sequential AND
-    * progressive (Annex G), cross-validated against the JDK's
-    * independent codec. Same output contract as [[decodeImages]];
-    * grayscale streams replicate Y into all three channels. */
-  def decodeJpegImages(media: DataFrame, thumbSide: Int = 2,
-      skipMalformed: Boolean = true): DataFrame =
-    decodeImagesWith(media, Jpeg.decode, thumbSide, skipMalformed)
-
-  /** PNG decode — the lossless-compression tier ([[Png]], implemented
-    * from the public W3C/ISO PNG spec; round 17): DEFLATE via the JDK,
-    * all five scanline filters, gray/RGB/palette/alpha colour types,
-    * CRC-verified chunk walk. Same output contract as
-    * [[decodeImages]]; alpha is dropped, gray replicates into RGB. */
-  def decodePngImages(media: DataFrame, thumbSide: Int = 2,
-      skipMalformed: Boolean = true): DataFrame =
-    decodeImagesWith(media, Png.decode, thumbSide, skipMalformed)
-
-  /** Lossless-WebP decode — the VP8L tier ([[Vp8l]], implemented from
-    * the public VP8L bitstream spec; round 18): prefix codes, LZ77 +
-    * color cache, meta groups, all four transforms. Same output
-    * contract as [[decodeImages]]; alpha is dropped. Lossy VP8 and
-    * animated containers refuse inside [[Webp.decode]] and drop under
-    * `skipMalformed` (they keep exact dedup through the undecodable
-    * route). */
-  def decodeWebpImages(media: DataFrame, thumbSide: Int = 2,
-      skipMalformed: Boolean = true): DataFrame =
-    decodeImagesWith(media, Webp.decode, thumbSide, skipMalformed)
-
   final case class JpegMetaRow(media_id: Long, width: Int, height: Int,
       n_components: Int, progressive: Boolean, samp_h: Int, samp_v: Int,
       restart_interval: Int, quality_est: Int, orientation: Int)
@@ -1346,19 +1262,11 @@ object Multimodal {
   def jpegMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Jpeg.meta(m.bytes)
-          Iterator.single(JpegMetaRow(m.media_id, md.width, md.height,
-            md.nComponents, md.progressive, md.sampH, md.sampV,
-            md.restartInterval, md.qualityEst, md.orientation))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed jpeg for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "jpeg", skipMalformed) { (id, b) =>
+      val md = Jpeg.meta(b)
+      Iterator.single(JpegMetaRow(id, md.width, md.height, md.nComponents,
+        md.progressive, md.sampH, md.sampV, md.restartInterval,
+        md.qualityEst, md.orientation))
     }.toDF()
   }
 
@@ -1381,21 +1289,12 @@ object Multimodal {
   def pngMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Png.meta(m.bytes)
-          Iterator.single(PngMetaRow(m.media_id, md.width, md.height,
-            md.bitDepth, md.colorType, md.interlaced, md.nChunks,
-            md.idatBytes, md.paletteSize, md.hasAlpha,
-            md.unknownCritical, md.animated, md.nFrames,
-            md.totalDelayCs))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed png for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "png", skipMalformed) { (id, b) =>
+      val md = Png.meta(b)
+      Iterator.single(PngMetaRow(id, md.width, md.height, md.bitDepth,
+        md.colorType, md.interlaced, md.nChunks, md.idatBytes,
+        md.paletteSize, md.hasAlpha, md.unknownCritical, md.animated,
+        md.nFrames, md.totalDelayCs))
     }.toDF()
   }
 
@@ -1413,19 +1312,11 @@ object Multimodal {
   def mp3Metadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Mp3.meta(m.bytes)
-          Iterator.single(Mp3MetaRow(m.media_id, md.version, md.layer,
-            md.sampleRate, md.bitrateKbps, md.vbr, md.nFrames,
-            md.durationMs, md.hasId3v2, md.hasId3v1))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed mp3 for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "mp3", skipMalformed) { (id, b) =>
+      val md = Mp3.meta(b)
+      Iterator.single(Mp3MetaRow(id, md.version, md.layer, md.sampleRate,
+        md.bitrateKbps, md.vbr, md.nFrames, md.durationMs, md.hasId3v2,
+        md.hasId3v1))
     }.toDF()
   }
 
@@ -1443,20 +1334,11 @@ object Multimodal {
   def flacMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Flac.meta(m.bytes)
-          Iterator.single(FlacMetaRow(m.media_id, md.sampleRate,
-            md.nChannels, md.bitsPerSample, md.totalSamples,
-            md.durationMs, md.nBlocks, md.hasSeekTable,
-            md.hasVorbisComment))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed flac for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "flac", skipMalformed) { (id, b) =>
+      val md = Flac.meta(b)
+      Iterator.single(FlacMetaRow(id, md.sampleRate, md.nChannels,
+        md.bitsPerSample, md.totalSamples, md.durationMs, md.nBlocks,
+        md.hasSeekTable, md.hasVorbisComment))
     }.toDF()
   }
 
@@ -1472,18 +1354,10 @@ object Multimodal {
   def oggMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Ogg.meta(m.bytes)
-          Iterator.single(OggMetaRow(m.media_id, md.codec, md.sampleRate,
-            md.nChannels, md.nPages, md.lastGranule, md.durationMs))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed ogg for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "ogg", skipMalformed) { (id, b) =>
+      val md = Ogg.meta(b)
+      Iterator.single(OggMetaRow(id, md.codec, md.sampleRate, md.nChannels,
+        md.nPages, md.lastGranule, md.durationMs))
     }.toDF()
   }
 
@@ -1499,19 +1373,10 @@ object Multimodal {
   def mp4Metadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Mp4.meta(m.bytes)
-          Iterator.single(Mp4MetaRow(m.media_id, md.majorBrand,
-            md.timescale, md.durationMs, md.nTracks, md.videoCodec,
-            md.audioCodec, md.hasMdat))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed mp4 for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "mp4", skipMalformed) { (id, b) =>
+      val md = Mp4.meta(b)
+      Iterator.single(Mp4MetaRow(id, md.majorBrand, md.timescale,
+        md.durationMs, md.nTracks, md.videoCodec, md.audioCodec, md.hasMdat))
     }.toDF()
   }
 
@@ -1529,19 +1394,11 @@ object Multimodal {
   def gifMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Gif.meta(m.bytes)
-          Iterator.single(GifMetaRow(m.media_id, md.width, md.height,
-            md.version, md.nFrames, md.animated, md.hasTransparency,
-            md.gctSize, md.interlaced, md.totalDelayCs))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed gif for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "gif", skipMalformed) { (id, b) =>
+      val md = Gif.meta(b)
+      Iterator.single(GifMetaRow(id, md.width, md.height, md.version,
+        md.nFrames, md.animated, md.hasTransparency, md.gctSize,
+        md.interlaced, md.totalDelayCs))
     }.toDF()
   }
 
@@ -1551,230 +1408,106 @@ object Multimodal {
 
   /** Decodeless WebP metadata ([[Webp.meta]]): container format
     * (lossy/lossless/extended), dimensions, alpha, animation census —
-    * the crawl filter/group pass for the top-3 modern image format,
-    * whose PIXEL decode is deliberately out of scope (VP8 entropy
-    * coding — the MP3/H.264 boundary). Truncated streams drop under
-    * `skipMalformed` (the RIFF length census refuses). */
+    * the crawl filter/group pass for the top-3 modern image format.
+    * Truncated streams drop under `skipMalformed` (the RIFF length
+    * census refuses). */
   def webpMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val md = Webp.meta(m.bytes)
-          Iterator.single(WebpMetaRow(m.media_id, md.width, md.height,
-            md.format, md.hasAlpha, md.animated, md.nFrames,
-            md.totalDurationMs))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed webp for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "webp", skipMalformed) { (id, b) =>
+      val md = Webp.meta(b)
+      Iterator.single(WebpMetaRow(id, md.width, md.height, md.format,
+        md.hasAlpha, md.animated, md.nFrames, md.totalDurationMs))
     }.toDF()
   }
 
-  /** Second-byte values of a bare MPEG frame-sync header with
-    * NON-RESERVED version and layer codes — the ONE list both
-    * [[sniffFormat]] and [[classifyMedia]] enumerate (round 18: the two
-    * dispatches previously disagreed — classifyMedia listed only the
-    * Layer III codes while sniffFormat took any 0xFF 0xEx, including
-    * reserved version/layer combinations [[Mp3.meta]] refuses).
-    * Layout: 111 (sync tail) | version(2, ≠01 reserved) |
-    * layer(2, ≠00 reserved) | protection(1). */
-  private[graft] val Mp3SyncSecondBytes: Seq[Int] =
-    for {
-      ver <- Seq(0, 2, 3); layer <- Seq(1, 2, 3); prot <- Seq(0, 1)
-    } yield 0xe0 | (ver << 3) | (layer << 1) | prot
-
-  /** Magic-based container format id — the ONE sniffing order every
-    * Scala-side dispatch shares ([[mediaMetadata]], [[imageMetaGate]],
-    * [[mediaMetaGate]]; [[classifyMedia]] mirrors it as native column
-    * expressions, routing-pinned in the format specs). The round-17
-    * WebP-classified-as-audio bug is exactly what N parallel sniffing
-    * copies breed — there is one now. Round 18 tightened two arms so
-    * unrecognized blobs fall through to `unknown` and stay KEPT instead
-    * of failing a strict walk they were never valid for: the wav arm
-    * requires the `WAVE` form tag (a bare-RIFF AVI is not a wav), and
-    * the bare-MP3 arm requires non-reserved version/layer bits
-    * ([[Mp3SyncSecondBytes]]). */
-  private[graft] def sniffFormat(b: Array[Byte]): String =
-    if (b.length >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) "jpeg"
-    else if (Png.isPng(b)) "png"
-    else if (Gif.isGif(b)) "gif"
-    else if (Webp.isWebp(b)) "webp"
-    else if (b.length >= 2 && b(0) == 'P' && b(1) == '6') "ppm"
-    else if (b.length >= 4 && b(0) == 'q' && b(1) == 'o' && b(2) == 'i' &&
-      b(3) == 'f') "qoi"
-    else if (b.length >= 3 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-      // ID3v2-tagged streams: the tag says nothing about the codec
-      // behind it — an ID3v2-prefixed FLAC (a common real-world shape)
-      // must not commit to mp3 and drop at Mp3.meta's strict frame
-      // walk. Skip the well-formed tag and re-sniff the first post-tag
-      // bytes; a malformed/truncated tag stays mp3 (Mp3.meta refuses
-      // it loudly, the previous behavior).
-      val end = Mp3.id3v2TagEnd(b)
-      if (end > 0 && end + 4 <= b.length && b(end) == 'f' &&
-        b(end + 1) == 'L' && b(end + 2) == 'a' && b(end + 3) == 'C') "flac"
-      else "mp3"
+  /** One blob's gate disposition at header cost, over the format's
+    * [[MediaFormat.Header]] — the ONE rule set behind [[imageMetaGate]],
+    * [[mediaMetaGate]] and [[mediaMetaGateDecoding]], so a pipeline
+    * composing any of them sees the same dispositions. In order:
+    * `dropped_unsupported` when the header flags it; geometry
+    * (`minSide`, `maxPixels`) when the container reports it — images,
+    * and Y4M first; then duration for audio and video (an audio stream
+    * whose walker establishes no duration, −1: an Ogg with an unknown
+    * codec, is kept — the gate keeps what it cannot judge). Images gate
+    * on geometry only (a GIF's duration is ancillary); unknown
+    * containers stay kept. Throws on a failed structural walk (the
+    * caller maps that to `dropped_malformed`). */
+  private def gateOf(fmt: Option[MediaFormat], b: Array[Byte], minSide: Int,
+      maxPixels: Long, minDurationMs: Long, maxDurationMs: Long): String =
+    fmt match {
+      case None => "kept"
+      case Some(f) =>
+        val h = f.header(b)
+        val geometry =
+          if (h.width < 0) "kept"
+          else if (h.width < minSide || h.height < minSide) "dropped_tiny"
+          else if (h.width.toLong * h.height > maxPixels) "dropped_huge"
+          else "kept"
+        if (h.unsupported) "dropped_unsupported"
+        else if (geometry != "kept" || f.modality == "image") geometry
+        else if (h.durationMs < 0 && f.modality == "audio") "kept"
+        else if (h.durationMs < minDurationMs) "dropped_tiny"
+        else if (h.durationMs > maxDurationMs) "dropped_huge"
+        else "kept"
     }
-    else if (b.length >= 2 && (b(0) & 0xff) == 0xff &&
-      Mp3SyncSecondBytes.contains(b(1) & 0xff)) "mp3"
-    else if (Flac.isFlac(b)) "flac"
-    else if (Ogg.isOgg(b)) "ogg"
-    else if (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-      b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' &&
-      b(11) == 'E') "wav"
-    else if (b.length >= 8 && b(4) == 'f' && b(5) == 't' && b(6) == 'y' &&
-      b(7) == 'p') "mp4"
-    else if (b.length >= 9 &&
-      new String(b, 0, 9, "US-ASCII") == "YUV4MPEG2") "y4m"
-    else "unknown"
-
-  private[graft] def modalityOf(format: String): String = format match {
-    case "jpeg" | "png" | "gif" | "webp" | "ppm" | "qoi" => "image"
-    // ogg routes AUDIO: the container is codec-agnostic but its crawl
-    // population is overwhelmingly Vorbis/Opus; a Theora-in-Ogg video
-    // would land in the audio cohort where only its exact duplicates
-    // survive — the documented boundary for formats without a decoder
-    case "mp3" | "wav" | "flac" | "ogg" => "audio"
-    case "mp4" | "y4m" => "video"
-    case _ => "unknown"
-  }
-
-  /** One blob's gate disposition at header cost — the SHARED core of
-    * [[imageMetaGate]] and [[mediaMetaGate]] (two gates over one rule
-    * set, so a pipeline composing either sees the same dispositions):
-    * geometry for images (PPM/QOI via header-only dims readers — a
-    * declared-dims bomb never costs an allocation here), duration for
-    * audio/video, unknown kept. Throws on a failed structural walk
-    * (the caller maps that to dropped_malformed). */
-  private def gateOf(b: Array[Byte], format: String, minSide: Int,
-      maxPixels: Long, minDurationMs: Long, maxDurationMs: Long): String = {
-    def geom(w: Int, h: Int): String =
-      if (w < minSide || h < minSide) "dropped_tiny"
-      else if (w.toLong * h > maxPixels) "dropped_huge"
-      else "kept"
-    def dur(ms: Long): String =
-      if (ms < minDurationMs) "dropped_tiny"
-      else if (ms > maxDurationMs) "dropped_huge"
-      else "kept"
-    format match {
-      case "jpeg" => val md = Jpeg.meta(b); geom(md.width, md.height)
-      case "png" =>
-        val md = Png.meta(b)
-        if (md.unknownCritical) "dropped_unsupported"
-        else geom(md.width, md.height)
-      case "gif" => val md = Gif.meta(b); geom(md.width, md.height)
-      case "webp" => val md = Webp.meta(b); geom(md.width, md.height)
-      case "ppm" => val (w, h) = Ppm.dims(b); geom(w, h)
-      case "qoi" => val (w, h) = Qoi.dims(b); geom(w, h)
-      case "mp3" => dur(Mp3.meta(b).durationMs)
-      case "wav" => dur(Wav.meta(b).durationMs)
-      case "flac" => dur(Flac.meta(b).durationMs)
-      case "ogg" =>
-        val ms = Ogg.meta(b).durationMs
-        // unknown codec: the page walk is sound but the granule has no
-        // timebase — the gate keeps what it cannot judge
-        if (ms < 0) "kept" else dur(ms)
-      case "mp4" => dur(Mp4.meta(b).durationMs)
-      case "y4m" =>
-        val md = Y4m.meta(b)
-        val g = geom(md.width, md.height)
-        if (g != "kept") g else dur(md.durationMs)
-      case _ => "kept"
-    }
-  }
 
   final case class MediaMetaRow(media_id: Long, modality: String,
       format: String, width: Int, height: Int, duration_ms: Long,
       sample_rate: Int)
 
   /** UNIFIED decodeless metadata across every supported container —
-    * the crawl's universal pre-pass (round 17): one magic-byte
-    * dispatch per blob into the format's header walker
-    * ([[graft.ops.Jpeg.meta]] / [[graft.ops.Png.meta]] /
-    * [[graft.ops.Mp3.meta]] / [[graft.ops.Mp4.meta]] / [[Wav.meta]] /
-    * [[Y4m.meta]]; the uncompressed P6/QOI tier validates via its
-    * trivial decode), one row per blob with the cross-modality
-    * filter/group columns: modality, format, dimensions, duration,
-    * sample rate (−1 where the modality has no such axis — sentinels
-    * instead of NULLs so downstream grouping and the oracle compare
-    * stay total-order clean). Blobs with an UNKNOWN magic survive as
-    * (unknown, unknown, −1…) — the routing-parity discipline: a
-    * pre-pass must never silently drop what it cannot read, only a
-    * failed STRUCTURAL walk drops (under `skipMalformed`, like every
-    * decode path). Header cost per blob for every compressed format. */
+    * the crawl's universal pre-pass: one [[MediaFormat.sniff]] per blob
+    * into the format's header walker, one row per blob with the
+    * cross-modality filter/group columns: modality, format, dimensions,
+    * duration, sample rate — the [[MediaFormat.Header]] axes, −1 where
+    * the container has no such axis (sentinels instead of NULLs so
+    * downstream grouping and the oracle compare stay total-order
+    * clean). Blobs with an UNKNOWN magic survive as (unknown, unknown,
+    * −1…) — the routing-parity discipline: a pre-pass must never
+    * silently drop what it cannot read, only a failed STRUCTURAL walk
+    * drops (under `skipMalformed`, like every decode path). Header cost
+    * per blob for every compressed format. */
   def mediaMetadata(media: DataFrame, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.flatMap { m =>
-        val b = m.bytes
-        try {
-          val fmt = sniffFormat(b)
-          val row = fmt match {
-            case "jpeg" =>
-              val md = Jpeg.meta(b)
-              MediaMetaRow(m.media_id, "image", fmt, md.width, md.height, -1L, -1)
-            case "png" =>
-              val md = Png.meta(b)
-              MediaMetaRow(m.media_id, "image", fmt, md.width, md.height,
-                md.totalDelayCs * 10L, -1)
-            case "ppm" =>
-              val (w, h) = Ppm.dims(b)
-              MediaMetaRow(m.media_id, "image", fmt, w, h, -1L, -1)
-            case "qoi" =>
-              val (w, h) = Qoi.dims(b)
-              MediaMetaRow(m.media_id, "image", fmt, w, h, -1L, -1)
-            case "gif" =>
-              val md = Gif.meta(b)
-              MediaMetaRow(m.media_id, "image", fmt, md.width, md.height,
-                md.totalDelayCs * 10L, -1)
-            case "webp" =>
-              val md = Webp.meta(b)
-              MediaMetaRow(m.media_id, "image", fmt, md.width, md.height,
-                if (md.animated) md.totalDurationMs else -1L, -1)
-            case "mp3" =>
-              val md = Mp3.meta(b)
-              MediaMetaRow(m.media_id, "audio", fmt, -1, -1,
-                md.durationMs, md.sampleRate)
-            case "wav" =>
-              val md = Wav.meta(b)
-              MediaMetaRow(m.media_id, "audio", fmt, -1, -1,
-                md.durationMs, md.sampleRate)
-            case "flac" =>
-              val md = Flac.meta(b)
-              MediaMetaRow(m.media_id, "audio", fmt, -1, -1,
-                md.durationMs, md.sampleRate)
-            case "ogg" =>
-              val md = Ogg.meta(b)
-              MediaMetaRow(m.media_id, "audio", fmt, -1, -1,
-                md.durationMs, md.sampleRate)
-            case "mp4" =>
-              val md = Mp4.meta(b)
-              MediaMetaRow(m.media_id, "video", fmt, -1, -1, md.durationMs, -1)
-            case "y4m" =>
-              val md = Y4m.meta(b)
-              MediaMetaRow(m.media_id, "video", fmt, md.width, md.height,
-                md.durationMs, -1)
-            case _ => MediaMetaRow(m.media_id, "unknown", "unknown",
-              -1, -1, -1L, -1)
-          }
-          Iterator.single(row)
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed media for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "media", skipMalformed) { (id, b) =>
+      Iterator.single(MediaFormat.sniff(b) match {
+        case Some(f) =>
+          val h = f.header(b)
+          MediaMetaRow(id, f.modality, f.name, h.width, h.height,
+            h.durationMs, h.sampleRate)
+        case None => MediaMetaRow(id, "unknown", "unknown", -1, -1, -1L, -1)
+      })
     }.toDF()
   }
 
+  /** The one gate walk: sniff each blob ONCE (a corrupt blob's star
+    * pairs still land in the right modality cohort because the modality
+    * derives from the magic, not from the failed walk), gate it with
+    * [[gateOf]], and `emit` the caller's row from (blob, modality,
+    * gate). */
+  private def gateWalk[T: Encoder](media: DataFrame, minSide: Int,
+      maxPixels: Long, minDurationMs: Long, maxDurationMs: Long)(
+      emit: (BlobRow, String, String) => T): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("media_id"), col("bytes")).as[BlobRow].mapPartitions { it =>
+      it.map { m =>
+        val fmt = MediaFormat.sniff(m.bytes)
+        val gate =
+          try gateOf(fmt, m.bytes, minSide, maxPixels, minDurationMs,
+            maxDurationMs)
+          catch { case _: Exception => "dropped_malformed" }
+        emit(m, fmt.fold("unknown")(_.modality), gate)
+      }
+    }
+  }
+
   /** Pre-decode metadata gate — the composition real crawl pipelines
-    * run with [[jpegMetadata]]/[[pngMetadata]] (round 17): classify
-    * each image blob by its HEADER metadata before any pixel decode.
-    * One mapPartitions projection, header-bytes cost per blob:
+    * run with [[jpegMetadata]]/[[pngMetadata]]: classify each blob by
+    * its HEADER metadata before any pixel decode. One mapPartitions
+    * projection, header-bytes cost per blob:
     *  - `dropped_malformed`: the structural walk refuses (truncated
     *    download, desynced markers, CRC rot)
     *  - `dropped_tiny`: a side under `minSide` (tracking pixels,
@@ -1787,79 +1520,43 @@ object Multimodal {
     *    chunk (the Apple CgBI shape; [[Png.meta]]'s `unknownCritical`
     *    flag) — known BEFORE decode, which is the cost-routing signal
     *    the decodeless walk exists for
-    *  - `kept`: everything else, including non-JPEG/PNG magics (the
-    *    cheap formats have no header walker and decode directly; their
-    *    malformed blobs still drop at decode under DROPMALFORMED).
-    * Returns (media_id, bytes, gate). */
+    *  - `kept`: everything else, including unknown magics.
+    * [[mediaMetaGate]]'s rules with the duration axes disabled. Returns
+    * (media_id, bytes, gate). */
   def imageMetaGate(media: DataFrame, minSide: Int = 8,
       maxPixels: Long = 100000000L): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.map { m =>
-        // the SHARED gate core with the duration axes disabled — the
-        // image gate and the cross-modality gate apply ONE rule set,
-        // so a pipeline composing either sees the same dispositions
-        val gate =
-          try gateOf(m.bytes, sniffFormat(m.bytes), minSide, maxPixels,
-            Long.MinValue, Long.MaxValue)
-          catch { case _: Exception => "dropped_malformed" }
-        (m.media_id, m.bytes, gate)
-      }
-    }.toDF("media_id", "bytes", "gate")
+    gateWalk(media, minSide, maxPixels, Long.MinValue, Long.MaxValue)(
+      (m, _, gate) => (m.media_id, m.bytes, gate))
+      .toDF("media_id", "bytes", "gate")
   }
 
   /** CROSS-MODALITY pre-decode gate — [[imageMetaGate]] extended over
-    * every container the unified pre-pass reads (round 17, late): one
-    * header walk per blob classifies it for the whole pipeline before
-    * any decode. Images gate on geometry ([[imageMetaGate]]'s rules,
-    * including the CgBI `dropped_unsupported` route); audio and video
-    * gate on DURATION — sub-`minDurationMs` clips are the tracking
-    * pixels of the audio/video world (click junk, zero-length
-    * uploads), beyond-`maxDurationMs` ones the cost bombs; GIFs gate as
-    * images (their duration is ancillary); unknown magics stay kept
-    * (the routing-parity discipline). A failed structural walk is
-    * `dropped_malformed` in every modality. Returns (media_id, bytes,
-    * modality, gate). */
+    * every container the unified pre-pass reads: one header walk per
+    * blob classifies it for the whole pipeline before any decode.
+    * Images gate on geometry ([[imageMetaGate]]'s rules, including the
+    * CgBI `dropped_unsupported` route); audio and video gate on
+    * DURATION — sub-`minDurationMs` clips are the tracking pixels of
+    * the audio/video world (click junk, zero-length uploads),
+    * beyond-`maxDurationMs` ones the cost bombs; Y4M gates on geometry
+    * first; GIFs gate as images (their duration is ancillary); unknown
+    * magics stay kept (the routing-parity discipline). A failed
+    * structural walk is `dropped_malformed` in every modality. Returns
+    * (media_id, bytes, modality, gate). */
   def mediaMetaGate(media: DataFrame, minSide: Int = 8,
       maxPixels: Long = 100000000L, minDurationMs: Long = 0L,
       maxDurationMs: Long = Long.MaxValue): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.map { m =>
-        // sniff ONCE: a corrupt blob's star pairs still land in the
-        // right modality cohort because the modality derives from the
-        // magic, not from the (failed) walk
-        val fmt = sniffFormat(m.bytes)
-        val gate =
-          try gateOf(m.bytes, fmt, minSide, maxPixels, minDurationMs,
-            maxDurationMs)
-          catch { case _: Exception => "dropped_malformed" }
-        (m.media_id, m.bytes, modalityOf(fmt), gate)
-      }
-    }.toDF("media_id", "bytes", "modality", "gate")
+    gateWalk(media, minSide, maxPixels, minDurationMs, maxDurationMs)(
+      (m, modality, gate) => (m.media_id, m.bytes, modality, gate))
+      .toDF("media_id", "bytes", "modality", "gate")
   }
 
-  /** [[mediaMetaGate]] fused with the KEPT image cohort's pixel decode
-    * (round 20, guide §8 "move big rows once"): the gate already streams
-    * every payload byte past the header walk, so decoding the kept
-    * images' thumbnails IN THE SAME PASS removes the second full read of
-    * the image cohort's bytes (and the separate decode job) that
-    * [[gatedMediaDedup]] used to pay in [[routedImageDedup]]. Decode
-    * attempts stay ≡ the kept image census — the SAME
-    * `graft.image_decode_attempts` accumulator counts them, now charged
-    * at the gate — and the thumbs are bit-identical to
-    * [[decodeAnyImages]]' (shared [[decodeAnyImageBytes]] dispatch +
-    * [[thumbnailOf]]). `thumb` is NULL for non-images, gated-out blobs,
-    * and kept images whose decode refuses (those keep routing to exact
-    * blob dedup, the undecodable discipline). Returns (media_id, bytes,
-    * modality, gate, thumb). */
   /** One blob's fused decode-to-thumbnail attempt — the SHARED body of
-    * every fused gate+decode walk (extracted so a change to attempt
-    * counting, exception handling, or orientation can never
-    * desynchronize a fused site from [[decodeImagesWith]]'s census):
-    * counts the attempt on the given accumulator, decodes via
+    * every fused gate+decode walk: counts the attempt on the given
+    * accumulator (the census [[decodeAnyImages]] keeps), decodes via
     * [[decodeAnyImageBytes]], applies the EXIF orientation convention
     * when asked, and returns the [[thumbnailOf]] floats — or null when
     * the decode refuses (the undecodable route). */
@@ -1876,6 +1573,23 @@ object Multimodal {
     } catch { case _: Exception => null }
   }
 
+  /** [[mediaMetaGate]] fused with the KEPT image cohort's pixel decode
+    * (round 20, guide §8 "move big rows once"): the gate already streams
+    * every payload byte past the header walk, so decoding the kept
+    * images' thumbnails IN THE SAME PASS removes the second full read of
+    * the image cohort's bytes (and the separate decode job) that
+    * [[gatedMediaDedup]] used to pay in [[routedImageDedup]]. Decode
+    * attempts stay ≡ the kept image census — the SAME
+    * `graft.image_decode_attempts` accumulator counts them, now charged
+    * at the gate — and the thumbs are bit-identical to
+    * [[decodeAnyImages]]' (shared [[decodeAnyImageBytes]] dispatch +
+    * [[thumbnailOf]]). `thumb` is NULL for non-images, gated-out blobs,
+    * and kept images whose decode refuses (those keep routing to exact
+    * blob dedup, the undecodable discipline). Callers checkpoint this
+    * frame, and that checkpoint holds every payload's bytes PLUS the
+    * kept images' thumbs — `thumbSide`² × 3 floats each, so it grows
+    * with `thumbSide`². Returns (media_id, bytes, modality, gate,
+    * thumb). */
   private[graft] def mediaMetaGateDecoding(media: DataFrame, minSide: Int,
       maxPixels: Long, minDurationMs: Long, maxDurationMs: Long,
       thumbSide: Int, autoOrient: Boolean): DataFrame = {
@@ -1883,20 +1597,13 @@ object Multimodal {
     import spark.implicits._
     val attempts = spark.sparkContext
       .longAccumulator("graft.image_decode_attempts")
-    media.select(col("media_id"), col("bytes")).as[ImageRow].mapPartitions { it =>
-      it.map { m =>
-        val fmt = sniffFormat(m.bytes)
-        val gate =
-          try gateOf(m.bytes, fmt, minSide, maxPixels, minDurationMs,
-            maxDurationMs)
-          catch { case _: Exception => "dropped_malformed" }
-        val modality = modalityOf(fmt)
-        val thumb: Array[Float] =
+    gateWalk(media, minSide, maxPixels, minDurationMs, maxDurationMs) {
+      (m, modality, gate) =>
+        val thumb =
           if (gate == "kept" && modality == "image")
             decodeThumbOrNull(m.bytes, thumbSide, autoOrient, attempts)
           else null
         (m.media_id, m.bytes, modality, gate, thumb)
-      }
     }.toDF("media_id", "bytes", "modality", "gate", "thumb")
   }
 
@@ -1989,10 +1696,11 @@ object Multimodal {
           .select(col("kept_key").as("id_a"), col("key").as("id_b"),
             lit("exact_blob").as("kind"), col("modality"))
       },
-      () => routedMediaDedupTagged(kept, maxHamming,
-        maxBucketDf, minMatchedFrames, maxFrameDf, thumbSide, flatEps,
-        silenceFloor, imageAhash, imageAutoOrient,
-        imageDec = Some(keptImageDec))))
+      () => routedMediaDedupTagged(kept,
+        img => routedImageDedupDecoded(img, keptImageDec, maxHamming,
+          maxBucketDf, ahash = imageAhash),
+        maxHamming, maxBucketDf, minMatchedFrames, maxFrameDf, thumbSide,
+        silenceFloor)))
     parts(0).unionByName(parts(1))
   }
 
@@ -2363,14 +2071,31 @@ object Multimodal {
     md.contains(ImageOrientedKey) && md.getBoolean(ImageOrientedKey)
   }
 
-  /** Mixed-format image decode: dispatch per blob on the magic bytes
-    * (`P6` → [[Ppm]], `FFD8` → [[Jpeg]], `\x89PNG` → [[Png]] (round
-    * 17), `qoif` → [[Qoi]]) — real corpora are never single-format
-    * (and are JPEG+PNG-dominated), and a per-format filter+union would
-    * read the media table once per format. Same output contract as
-    * [[decodeImages]].
+  /** The per-blob still-image dispatch behind [[decodeAnyImages]] — the
+    * [[MediaFormat]] entry's still decoder, ONE definition shared with
+    * the fused gate+decode walk ([[mediaMetaGateDecoding]]), so the two
+    * paths decode (and refuse) exactly the same blobs. A blob whose
+    * format has no still decoder (audio, video, an unknown container)
+    * refuses; lossy VP8 and animated WebP refuse inside [[Webp.decode]].
+    * Returns (width, height, RGB raster). */
+  private[graft] def decodeAnyImageBytes(
+      bytes: Array[Byte]): (Int, Int, Array[Byte]) =
+    MediaFormat.decoderOf(bytes, "still-image")(_.still)(bytes)
+
+  /** REAL image decode + feature extraction + resize, batch-at-a-time
+    * per partition, over a MIXED-format column: each blob dispatches on
+    * its magic ([[decodeAnyImageBytes]] — PPM, QOI, JPEG, PNG, GIF and
+    * lossless WebP; real corpora are never single-format, and a
+    * per-format filter+union would read the media table once per
+    * format), then per-channel means (exact integer sums → one IEEE
+    * division) and a `thumbSide`² nearest-neighbor RGB thumbnail
+    * normalized to [0,1] ([[thumbnailOf]]). `skipMalformed` mirrors CSV
+    * DROPMALFORMED: corrupt or undecodable blobs are dropped instead of
+    * failing the job. Every blob entering the decode counts on the
+    * `graft.image_decode_attempts` accumulator. Grayscale replicates
+    * into RGB; alpha is dropped.
     *
-    * `autoOrient` (round 17) applies the EXIF orientation transform
+    * `autoOrient` applies the EXIF orientation transform
     * ([[Jpeg.exifOrientation]] tag 1-8 → [[applyOrientation]]) to the
     * decoded raster BEFORE the thumbnail is sampled, inside the same
     * mapPartitions projection — no new shuffle, no second decode. dHash
@@ -2381,36 +2106,26 @@ object Multimodal {
     * a frozen signature index can never be probed with the other
     * convention. Non-JPEG formats carry no EXIF here and pass through
     * unchanged (tag 0). */
-  /** The per-blob image dispatch behind [[decodeAnyImages]] — ONE
-    * definition, shared with the fused gate+decode walk
-    * ([[mediaMetaGateDecoding]]), so the two paths decode (and refuse)
-    * exactly the same blobs. */
-  private[graft] def decodeAnyImageBytes(
-      bytes: Array[Byte]): (Int, Int, Array[Byte]) =
-    if (bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == '6')
-      Ppm.decode(bytes)
-    else if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff &&
-        (bytes(1) & 0xff) == 0xd8)
-      Jpeg.decode(bytes)
-    else if (Png.isPng(bytes)) Png.decode(bytes)
-    else if (Gif.isGif(bytes)) Gif.decode(bytes)
-    else if (Webp.isWebp(bytes))
-      // LOSSLESS (VP8L) decodes for real since round 18 (the
-      // from-spec Vp8l codec); lossy VP8 and animated containers
-      // keep refusing loudly inside Webp.decode — those blobs keep
-      // exact dedup through the undecodable route
-      Webp.decode(bytes)
-    else Qoi.decode(bytes)
-
   def decodeAnyImages(media: DataFrame, thumbSide: Int = 2,
       skipMalformed: Boolean = true, autoOrient: Boolean = false): DataFrame = {
-    val base: Array[Byte] => (Int, Int, Array[Byte]) = decodeAnyImageBytes
-    val dec = decodeImagesWith(media,
-      if (!autoOrient) base
-      else { bytes =>
-        val (w, h, raster) = base(bytes)
-        applyOrientation(w, h, raster, Jpeg.exifOrientation(bytes))
-      }, thumbSide, skipMalformed)
+    val spark = media.sparkSession
+    import spark.implicits._
+    val dec = perBlob(media, "image", skipMalformed,
+        Some("graft.image_decode_attempts")) { (id, b) =>
+      val (w0, h0, raster0) = decodeAnyImageBytes(b)
+      val (w, h, raster) =
+        if (!autoOrient) (w0, h0, raster0)
+        else applyOrientation(w0, h0, raster0, Jpeg.exifOrientation(b))
+      var (sr, sg, sb) = (0L, 0L, 0L)
+      var p = 0
+      while (p < raster.length) {
+        sr += raster(p) & 0xff; sg += raster(p + 1) & 0xff; sb += raster(p + 2) & 0xff
+        p += 3
+      }
+      val n = (w * h).toDouble
+      Iterator.single(DecodedImage(id, w, h, sr / n, sg / n, sb / n,
+        thumbnailOf(w, h, raster, thumbSide)))
+    }.toDF()
     if (!autoOrient) dec
     else {
       val md = new org.apache.spark.sql.types.MetadataBuilder()
@@ -2653,33 +2368,25 @@ object Multimodal {
       silenceFloor: Int = 0, skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[AudioRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val (_, samples) = decodePcm16(m.bytes)
-          var sq = 0.0
-          var peak = 0
-          var clipped = 0L
-          var i = 0
-          while (i < samples.length) {
-            val s = samples(i).toInt
-            val a = math.abs(s)
-            sq += s.toDouble * s
-            if (a > peak) peak = a
-            if (s == Short.MaxValue || s == Short.MinValue) clipped += 1
-            i += 1
-          }
-          val n = samples.length
-          Iterator.single((m.media_id,
-            if (n == 0) 0.0 else math.sqrt(sq / n), peak.toLong,
-            if (n == 0) 0.0 else clipped.toDouble / n, n.toLong,
-            peak <= silenceFloor))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed audio for media_id ${m.media_id}", e)
-        }
+    perBlob(media, "audio", skipMalformed) { (id, b) =>
+      val (_, samples) = decodePcm16(b)
+      var sq = 0.0
+      var peak = 0
+      var clipped = 0L
+      var i = 0
+      while (i < samples.length) {
+        val s = samples(i).toInt
+        val a = math.abs(s)
+        sq += s.toDouble * s
+        if (a > peak) peak = a
+        if (s == Short.MaxValue || s == Short.MinValue) clipped += 1
+        i += 1
       }
+      val n = samples.length
+      Iterator.single((id,
+        if (n == 0) 0.0 else math.sqrt(sq / n), peak.toLong,
+        if (n == 0) 0.0 else clipped.toDouble / n, n.toLong,
+        peak <= silenceFloor))
     }.toDF("media_id", "rms", "peak", "clip_rate", "n_samples", "is_silent")
   }
 
@@ -2731,17 +2438,15 @@ object Multimodal {
   }
 
   /** Unified MIXED-MODALITY dedup routing — real corpora carry images,
-    * audio, and video in ONE media column: dispatch each blob on its
-    * magic bytes (`P6`/`qoif` → image, `RIFF` → audio, `YUV4MPEG2` →
-    * video — the [[decodeAnyImages]] dispatch extended across
-    * containers), route each cohort through its modality's
+    * audio, and video in ONE media column: classify each blob on its
+    * magic bytes ([[classifyMedia]], the [[MediaFormat]] table as native
+    * column compares), route each cohort through its modality's
     * degenerate-aware routed dedup, and return ONE pair frame
     * (id_a, id_b, kind, modality). Blobs with an unrecognized magic
     * still dedup EXACTLY (star pairs under the min key, kind =
     * 'exact_blob', modality = 'unknown') — an undecodable blob loses
     * perceptual matching, never its byte-identical duplicates (the
-    * routing discipline, applied to the dispatcher itself). The
-    * classification is one native substring compare per blob; each blob
+    * routing discipline, applied to the dispatcher itself). Each blob
     * is decoded at most once, in exactly one modality branch. */
   def routedMediaDedup(media: DataFrame, maxHamming: Int = 3,
       maxBucketDf: Int = 1000, minMatchedFrames: Int = 2,
@@ -2757,7 +2462,8 @@ object Multimodal {
     // the image decode already runs concurrent with the audio/video
     // legs; moving it into the pre-parallel classify checkpoint
     // serialized it onto the critical path (m_routed_media 2.26→2.59 s,
-    // m_incr_media 2.90→3.07 s, min-of-5 A/B). `imageAhash` selects the
+    // m_incr_media 2.90→3.07 s, min-of-5 A/B). The image leg therefore
+    // decodes INSIDE its inParallel thunk. `imageAhash` selects the
     // image cohort's hash family — a caller composing this with
     // [[mediaAgainstIndexes]] against an ahash-family
     // [[imageSignatureIndex]] passes indexHashIsAhash(index) so the
@@ -2765,57 +2471,25 @@ object Multimodal {
     // corpus-side matches (exactly what [[incrementalMediaDedup]] does
     // internally).
     routedMediaDedupTagged(classifyMedia(media).localCheckpoint(),
+      img => routedImageDedup(img, maxHamming, maxBucketDf, thumbSide,
+        flatEps, imageAhash, imageAutoOrient),
       maxHamming, maxBucketDf, minMatchedFrames, maxFrameDf, thumbSide,
-      flatEps, silenceFloor, imageAhash, imageAutoOrient)
+      silenceFloor)
 
-  /** Magic-byte modality classification of a mixed media column — the
-    * [[decodeAnyImages]] dispatch extended across containers
-    * (`P6`/`qoif`/`FFD8` (JPEG SOI, round 16)/`\x89PNG` (round 17) →
-    * image, `RIFF`/`ID3`/MP3 frame sync (round 17) → audio,
-    * `YUV4MPEG2`/`ftyp` at offset 4 (ISO BMFF, round 17) → video,
-    * anything else → unknown): native substring compares per blob, a
-    * pure projection (stream-legal). MP3/MP4 blobs route to their
-    * modality's dedup where the undecodable branch keeps their exact
-    * duplicates and [[mp3Metadata]]/[[mp4Metadata]] read them at
+  /** Magic-byte modality classification of a mixed media column:
+    * [[MediaFormat.modalityColumn]] — the [[MediaFormat]] table's magics
+    * as native substring compares per blob, a pure projection
+    * (stream-legal, no JVM-side row walk; a JVM sniff here was measured
+    * slower in round 20). Formats without a decoder (MP3, OGG, MP4) route
+    * to their modality's dedup, where the undecodable branch keeps their
+    * exact duplicates and [[mp3Metadata]]/[[mp4Metadata]] read them at
     * header cost. Returns (media_id, bytes, modality). */
-  def classifyMedia(media: DataFrame): DataFrame = {
-    def magic(n: Int) = substring(col("bytes"), 1, n)
-    // MP3 sync prefixes: ID3v2-tagged streams lead with "ID3"; bare
-    // streams lead with the 11-bit sync + version/layer bits. The
-    // second-byte values enumerate [[Mp3SyncSecondBytes]] — the SAME
-    // list sniffFormat tests, so the Scala-side and native-column
-    // classifications cannot diverge (round 18: they did — only the
-    // Layer III codes were listed here while sniffFormat took any
-    // sync, so a bare Layer I/II stream routed audio in the gate and
-    // unknown here). The strict frame walk is Mp3.meta's job;
-    // classification only routes.
-    val mp3Sync = Mp3SyncSecondBytes
-      .map(b => magic(2) === lit(Array(0xff.toByte, b.toByte)))
-      .reduce(_ || _)
+  def classifyMedia(media: DataFrame): DataFrame =
     media.select(col("media_id"), col("bytes"),
-      when(magic(2) === lit("P6".getBytes) ||
-          magic(4) === lit("qoif".getBytes) ||
-          magic(8) === lit(Png.Signature) ||
-          magic(6) === lit("GIF87a".getBytes) ||
-          magic(6) === lit("GIF89a".getBytes) ||
-          // WebP is RIFF-framed: without this arm it routed to the
-          // AUDIO cohort (round-17 fix) — the image test must precede
-          // the RIFF/WAVE audio rule
-          (magic(4) === lit("RIFF".getBytes) &&
-            substring(col("bytes"), 9, 4) === lit("WEBP".getBytes)) ||
-          magic(2) === lit(Array(0xff.toByte, 0xd8.toByte)), "image")
-        .when((magic(4) === lit("RIFF".getBytes) &&
-            substring(col("bytes"), 9, 4) === lit("WAVE".getBytes)) ||
-          magic(4) === lit("fLaC".getBytes) ||
-          magic(4) === lit("OggS".getBytes) ||
-          magic(3) === lit("ID3".getBytes) || mp3Sync, "audio")
-        .when(magic(9) === lit("YUV4MPEG2".getBytes) ||
-          substring(col("bytes"), 5, 4) === lit("ftyp".getBytes), "video")
-        .otherwise("unknown").as("modality"))
-  }
+      MediaFormat.modalityColumn(col("bytes")).as("modality"))
 
   /** The (media_id, thumb[, is_flat]) probe frame a fused-decode tagged
-    * checkpoint yields — shared by the three round-20 call sites so the
+    * checkpoint yields — shared by the gated call sites so the
     * orientation metadata and null-thumb filtering cannot drift. */
   private def taggedImageDec(tagged: DataFrame, oriented: Boolean,
       flatEps: Option[Double]): DataFrame = {
@@ -2835,15 +2509,17 @@ object Multimodal {
   }
 
   /** [[routedMediaDedup]] over an already-classified (and checkpointed)
-    * [[classifyMedia]] frame. ([[incrementalMediaDedup]] does NOT reuse
-    * this body: it routes each cohort from a shared derived frame so the
-    * against-index probe reads the same decode — see there.) */
-  private def routedMediaDedupTagged(tagged: DataFrame, maxHamming: Int,
-      maxBucketDf: Int, minMatchedFrames: Int, maxFrameDf: Int,
-      thumbSide: Int, flatEps: Double, silenceFloor: Int,
-      imageAhash: Boolean = false,
-      imageAutoOrient: Boolean = false,
-      imageDec: Option[DataFrame] = None): DataFrame = {
+    * tagged frame (media_id, bytes, modality). `imageLeg` maps the image
+    * cohort (media_id, bytes) to its (id_a, id_b, kind) pairs and closes
+    * over its own settings: the standalone path decodes there, the
+    * fused gate routes a decode it already holds.
+    * ([[incrementalMediaDedup]] does NOT reuse this body: it routes each
+    * cohort from a shared derived frame so the against-index probe reads
+    * the same decode — see there.) */
+  private def routedMediaDedupTagged(tagged: DataFrame,
+      imageLeg: DataFrame => DataFrame, maxHamming: Int, maxBucketDf: Int,
+      minMatchedFrames: Int, maxFrameDf: Int, thumbSide: Int,
+      silenceFloor: Int): DataFrame = {
     def cohort(m: String) = tagged.filter(col("modality") === m)
       .select(col("media_id"), col("bytes"))
     // the four branches are independent (each reads only its cohort of
@@ -2851,15 +2527,7 @@ object Multimodal {
     // fingerprint checkpoints are EAGER jobs — overlap them (inParallel;
     // union order unchanged, results identical)
     val branches = inParallel(Seq(
-      // a caller that already decoded the image cohort (the fused gate,
-      // round 20) hands its (media_id, thumb, is_flat) frame in; the
-      // standalone path decodes here, exactly as before
-      () => (imageDec match {
-          case Some(dec) => routedImageDedupDecoded(cohort("image"), dec,
-            maxHamming, maxBucketDf, ahash = imageAhash)
-          case None => routedImageDedup(cohort("image"), maxHamming,
-            maxBucketDf, thumbSide, flatEps, imageAhash, imageAutoOrient)
-        }).withColumn("modality", lit("image")),
+      () => imageLeg(cohort("image")).withColumn("modality", lit("image")),
       () => routedAudioDedup(cohort("audio"), maxHamming, maxBucketDf,
           silenceFloor)
         .withColumn("modality", lit("audio")),
@@ -2918,21 +2586,23 @@ object Multimodal {
     // there the gate already runs a per-row JVM walk, so the decode
     // rides an existing deserialization, and the A/B win was real.
     mediaAgainstIndexesTagged(classifyMedia(media).localCheckpoint(),
-      imageIndex, audioIndex, videoIndex, blobIndex, maxHamming,
-      minMatchedFrames, thumbSide)
+      img => imageNearDupAgainstIndex(img, imageIndex, maxHamming,
+        thumbSide),
+      audioIndex, videoIndex, blobIndex, maxHamming, minMatchedFrames,
+      thumbSide)
 
+  /** [[mediaAgainstIndexes]] over an already-classified tagged frame.
+    * `imageLeg` maps the image cohort (media_id, bytes) to its
+    * (media_id, match_id) matches against the frozen image index and
+    * closes over its own settings (the fused gate probes a decode it
+    * already holds). */
   private def mediaAgainstIndexesTagged(tagged: DataFrame,
-      imageIndex: DataFrame, audioIndex: DataFrame, videoIndex: DataFrame,
-      blobIndex: DataFrame, maxHamming: Int, minMatchedFrames: Int,
-      thumbSide: Int, imageDec: Option[DataFrame] = None): DataFrame = {
+      imageLeg: DataFrame => DataFrame, audioIndex: DataFrame,
+      videoIndex: DataFrame, blobIndex: DataFrame, maxHamming: Int,
+      minMatchedFrames: Int, thumbSide: Int): DataFrame = {
     def cohort(m: String) = tagged.filter(col("modality") === m)
       .select(col("media_id"), col("bytes"))
-    // a caller that already decoded the image cohort (the fused gate,
-    // round 20) hands its (media_id, thumb) frame in; the standalone
-    // path decodes here, exactly as before
-    val img = imageDec.map(decodedAgainstIndex(_, imageIndex, maxHamming))
-      .getOrElse(imageNearDupAgainstIndex(cohort("image"), imageIndex,
-        maxHamming, thumbSide))
+    val img = imageLeg(cohort("image"))
       .select(col("media_id"), col("match_id"),
         lit("perceptual").as("kind"), lit("image").as("modality"))
     val aud = audioAgainstIndex(cohort("audio"), audioIndex, maxHamming)
@@ -2978,9 +2648,10 @@ object Multimodal {
       oriented, None)
     val dropped = gated.filter(col("gate") =!= "kept")
       .select(col("media_id"), col("bytes"), col("modality"))
-    mediaAgainstIndexesTagged(kept, imageIndex, audioIndex, videoIndex,
-        blobIndex, maxHamming, minMatchedFrames, thumbSide,
-        imageDec = Some(keptImageDec))
+    mediaAgainstIndexesTagged(kept,
+        _ => decodedAgainstIndex(keptImageDec, imageIndex, maxHamming),
+        audioIndex, videoIndex, blobIndex, maxHamming, minMatchedFrames,
+        thumbSide)
       .unionByName(blobsAgainstMd5Index(dropped, blobIndex))
   }
 
@@ -3142,43 +2813,32 @@ object Multimodal {
     // the audio twin of graft.image_decode_attempts: every blob
     // entering a PCM decode counts, so the cross-modality gate's
     // decode-only-the-kept claim is accumulator-provable per modality
-    val attempts = spark.sparkContext
-      .longAccumulator("graft.audio_decode_attempts")
-    media.select(col("media_id"), col("bytes")).as[AudioRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          attempts.add(1)
-          val (rate, samples) = decodePcm16(m.bytes)
-          // peak over the NATIVE samples: silence is rate-independent
-          // and the routed paths' silence predicate must judge the clip
-          // as stored (linear resampling can only lower a peak)
-          var peak = 0
-          var i = 0
-          while (i < samples.length) {
-            val a = math.abs(samples(i).toInt)
-            if (a > peak) peak = a
-            i += 1
-          }
-          if (peak <= skipGoertzelBelowPeak)
-            Iterator.single((m.media_id, 0L, Array.empty[Int], peak.toLong))
-          else {
-            // rate normalization (round 19): frame at the ONE frozen
-            // internal rate, so a resample of the same clip — or a
-            // 44.1 kHz FLAC against a 16 kHz WAV of one master —
-            // lands on the same frame grid instead of never pairing
-            // (the EXIF-rotation shape in audio). The convention is
-            // frozen into every audioSignatureIndex (AudioRateKey);
-            // cross-convention probes fail loud.
-            val words = AudioFp.frameWords(
-              AudioFp.resampleTo(samples, rate, AudioFp.IndexRate))
-            Iterator.single((m.media_id, AudioFp.simhash(words), words,
-              peak.toLong))
-          }
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed audio for media_id ${m.media_id}", e)
-        }
+    perBlob(media, "audio", skipMalformed,
+        Some("graft.audio_decode_attempts")) { (id, b) =>
+      val (rate, samples) = decodePcm16(b)
+      // peak over the NATIVE samples: silence is rate-independent
+      // and the routed paths' silence predicate must judge the clip
+      // as stored (linear resampling can only lower a peak)
+      var peak = 0
+      var i = 0
+      while (i < samples.length) {
+        val a = math.abs(samples(i).toInt)
+        if (a > peak) peak = a
+        i += 1
+      }
+      if (peak <= skipGoertzelBelowPeak)
+        Iterator.single((id, 0L, Array.empty[Int], peak.toLong))
+      else {
+        // rate normalization (round 19): frame at the ONE frozen
+        // internal rate, so a resample of the same clip — or a
+        // 44.1 kHz FLAC against a 16 kHz WAV of one master —
+        // lands on the same frame grid instead of never pairing
+        // (the EXIF-rotation shape in audio). The convention is
+        // frozen into every audioSignatureIndex (AudioRateKey);
+        // cross-convention probes fail loud.
+        val words = AudioFp.frameWords(
+          AudioFp.resampleTo(samples, rate, AudioFp.IndexRate))
+        Iterator.single((id, AudioFp.simhash(words), words, peak.toLong))
       }
     }.toDF("media_id", "fp", "words", "peak")
   }
@@ -3910,65 +3570,28 @@ object Multimodal {
 
   /** Per-frame luma thumbnails from Y4M containers: one row per frame
     * with a `thumbSide`² nearest-neighbor GRAY thumbnail in the
-    * [[decodeImages]] interleaved-RGB float layout (r = g = b = luma),
-    * so [[graft.functions.ImageHash64]] applies to frames unchanged.
-    * (Chroma is ignored: frame identity for dedup is a luma question.) */
+    * [[decodeAnyImages]] interleaved-RGB float layout (r = g = b =
+    * luma), so [[graft.functions.ImageHash64]] applies to frames
+    * unchanged. (Chroma is ignored: frame identity for dedup is a luma
+    * question.) */
   def decodeVideoThumbs(media: DataFrame, thumbSide: Int = 8,
       skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     // the video twin of graft.image_decode_attempts (gate audit)
-    val attempts = spark.sparkContext
-      .longAccumulator("graft.video_decode_attempts")
-    media.select(col("media_id"), col("bytes")).as[VideoRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          attempts.add(1)
-          val (w, h, _, frames) = Y4m.decode(m.bytes)
-          frames.iterator.zipWithIndex.map { case (f, k) =>
-            (m.media_id, k, lumaThumb(f, w, h, thumbSide))
-          }
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed video for media_id ${m.media_id}", e)
-        }
+    perBlob(media, "video", skipMalformed,
+        Some("graft.video_decode_attempts")) { (id, b) =>
+      val (w, h, _, frames) = Y4m.decode(b)
+      frames.iterator.zipWithIndex.map { case (f, k) =>
+        (id, k, lumaThumb(f, w, h, thumbSide))
       }
     }.toDF("media_id", "frame_idx", "thumb")
   }
 
-  /** Gray `side`² thumbnail of one luma plane in the [[decodeImages]]
-    * interleaved-RGB float layout (r = g = b = luma). */
-  /** Nearest-neighbor RGB thumbnail as normalized floats — the
-    * sampling arithmetic every frame-hash path must share (a rounding
-    * tweak applied to one copy would silently drift GIF vs video
-    * hashes). decodeImagesWith keeps its own FUSED loop (thumbnail +
-    * exact channel sums in one pass over the raster) — fusion there is
-    * measured hot-path structure, not drift risk, because its thumb
-    * feeds the SAME ImageHash64 expression downstream. */
-  private def rgbThumb(rgb: Array[Byte], w: Int, h: Int,
-      thumbSide: Int): Array[Float] = {
-    val thumb = new Array[Float](thumbSide * thumbSide * 3)
-    var ty = 0
-    while (ty < thumbSide) {
-      var tx = 0
-      while (tx < thumbSide) {
-        val src = (((ty * h) / thumbSide) * w + (tx * w) / thumbSide) * 3
-        val dst = (ty * thumbSide + tx) * 3
-        thumb(dst) = (rgb(src) & 0xff) / 255.0f
-        thumb(dst + 1) = (rgb(src + 1) & 0xff) / 255.0f
-        thumb(dst + 2) = (rgb(src + 2) & 0xff) / 255.0f
-        tx += 1
-      }
-      ty += 1
-    }
-    thumb
-  }
-
   /** DISTINCT frame dHashes with each hash's FIRST frame index — the
     * in-task distinct + temporal anchor every frame-sequence hash path
-    * shares (video and GIF must chain the SAME pos semantics into the
-    * LIS score). */
+    * shares (video and animations must chain the SAME pos semantics
+    * into the LIS score). */
   private def distinctFrameHashes(thumbs: Iterator[Array[Float]])
       : (Array[Long], Array[Int]) = {
     val firstAt = scala.collection.mutable.TreeMap.empty[Long, Int]
@@ -3981,6 +3604,8 @@ object Multimodal {
     (firstAt.keysIterator.toArray, firstAt.valuesIterator.toArray)
   }
 
+  /** Gray `side`² thumbnail of one luma plane in the [[thumbnailOf]]
+    * interleaved-RGB float layout (r = g = b = luma). */
   private def lumaThumb(f: Array[Byte], w: Int, h: Int,
       thumbSide: Int): Array[Float] = {
     val thumb = new Array[Float](thumbSide * thumbSide * 3)
@@ -4015,138 +3640,54 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     // the video twin of graft.image_decode_attempts (gate audit)
-    val attempts = spark.sparkContext
-      .longAccumulator("graft.video_decode_attempts")
-    media.select(col("media_id"), col("bytes")).as[VideoRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          attempts.add(1)
-          val (w, h, _, frames) = Y4m.decode(m.bytes)
-          val (hashes, pos) = distinctFrameHashes(
-            frames.iterator.map(f => lumaThumb(f, w, h, thumbSide)))
-          Iterator.single((m.media_id, hashes, pos))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed video for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "video", skipMalformed,
+        Some("graft.video_decode_attempts")) { (id, b) =>
+      val (w, h, _, frames) = Y4m.decode(b)
+      val (hashes, pos) = distinctFrameHashes(
+        frames.iterator.map(f => lumaThumb(f, w, h, thumbSide)))
+      Iterator.single((id, hashes, pos))
     }.toDF("media_id", "frame_hashes", "frame_pos")
   }
 
   /** Per-animation DISTINCT frame dHashes — [[videoFrameHashSets]]'
-    * GIF twin (round 17): an animated GIF is a frame sequence, so its
-    * COMPOSITED frames (transparency and disposal already applied —
-    * what a viewer actually shows, which is what a re-encode
-    * preserves) ride the same banded frame matching, stop-frame
-    * census, bucket guard, and LIS temporal score as real video
-    * containers. Same output contract: (media_id, frame_hashes,
+    * twin for the animated image containers: each blob dispatches
+    * through the [[MediaFormat]] entry's frame decoder (GIF via
+    * [[Gif.frames]], APNG via [[Png.frames]], animated WebP via
+    * [[Webp.frames]]; a still contributes its single frame), and its
+    * COMPOSITED frames (transparency, blending and disposal already
+    * applied — what a viewer shows, which is what a re-encode or a
+    * transcode preserves) ride the same banded frame matching,
+    * stop-frame census, bucket guard, and LIS temporal score as real
+    * video containers. A blob whose format has no frame decoder
+    * refuses. Same output contract: (media_id, frame_hashes,
     * frame_pos), first-occurrence positions as the temporal anchor. */
-  def gifFrameHashSets(media: DataFrame, thumbSide: Int = 8,
+  def animationFrameHashSets(media: DataFrame, thumbSide: Int = 8,
       skipMalformed: Boolean = true): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[VideoRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val (w, h, fs) = Gif.frames(m.bytes)
-          val (hashes, pos) = distinctFrameHashes(
-            fs.iterator.map { case (_, rgb) => rgbThumb(rgb, w, h, thumbSide) })
-          Iterator.single((m.media_id, hashes, pos))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed gif for media_id ${m.media_id}", e)
-        }
-      }
+    perBlob(media, "animation", skipMalformed) { (id, b) =>
+      val (w, h, fs) = MediaFormat.decoderOf(b, "frame")(_.frames)(b)
+      val (hashes, pos) = distinctFrameHashes(
+        fs.iterator.map { case (_, rgb) => thumbnailOf(w, h, rgb, thumbSide) })
+      Iterator.single((id, hashes, pos))
     }.toDF("media_id", "frame_hashes", "frame_pos")
   }
 
-  /** Animated-GIF near-dup pairs — the image↔video bridge: a trimmed
-    * or re-encoded animation shares composited frame hashes exactly as
-    * a video clip shares frame hashes, so this DELEGATES to the same
-    * banded matcher as [[videoNearDupPairs]] (one body — GIF and video
-    * matching cannot drift): stop-frame census, guarded banding at
+  /** Animation near-dup pairs — the image↔video bridge: a trimmed or
+    * re-encoded animation (GIF, APNG, animated WebP, or a mix of them)
+    * shares composited frame hashes exactly as a video clip shares
+    * frame hashes, so this DELEGATES to the same banded matcher as
+    * [[videoNearDupPairs]] (one body — animation and video matching
+    * cannot drift): stop-frame census, guarded banding at
     * `maxFrameHamming`, exact verify, matched-frame rollup with the
-    * `lis` temporal score and the `minLisFrac` keep policy. */
-  def gifNearDupPairs(media: DataFrame, minMatchedFrames: Int = 2,
+    * `lis` temporal score and the `minLisFrac` keep policy (which
+    * excludes a frame-reversed collage). */
+  def animationNearDupPairs(media: DataFrame, minMatchedFrames: Int = 2,
       maxFrameDf: Int = 1000, thumbSide: Int = 8,
       maxFrameHamming: Int = 3, maxBucketDf: Int = 1000,
       minLisFrac: Double = 0.0): DataFrame =
     videoNearDupPairsFromSets(
-      gifFrameHashSets(media, thumbSide).localCheckpoint(),
-      minMatchedFrames, maxFrameDf, maxFrameHamming, maxBucketDf,
-      minLisFrac)
-
-  /** Per-APNG composited frame-hash sets — [[gifFrameHashSets]]' PNG
-    * sibling over [[Png.frames]]; a plain PNG contributes its single
-    * frame. */
-  def apngFrameHashSets(media: DataFrame, thumbSide: Int = 8,
-      skipMalformed: Boolean = true): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[VideoRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val (w, h, fs) = Png.frames(m.bytes)
-          val (hashes, pos) = distinctFrameHashes(
-            fs.iterator.map { case (_, rgb) => rgbThumb(rgb, w, h, thumbSide) })
-          Iterator.single((m.media_id, hashes, pos))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed apng for media_id ${m.media_id}", e)
-        }
-      }
-    }.toDF("media_id", "frame_hashes", "frame_pos")
-  }
-
-  /** Animated-PNG near-dup pairs (round 18) — the image↔video bridge
-    * extended to APNG: composited frame hashes ride the SAME banded
-    * matcher as video clips and GIF animations (one body —
-    * [[videoNearDupPairsFromSets]] — so the three cannot drift),
-    * including the `minLisFrac` temporal keep policy that excludes a
-    * frame-reversed collage. */
-  def apngNearDupPairs(media: DataFrame, minMatchedFrames: Int = 2,
-      maxFrameDf: Int = 1000, thumbSide: Int = 8,
-      maxFrameHamming: Int = 3, maxBucketDf: Int = 1000,
-      minLisFrac: Double = 0.0): DataFrame =
-    videoNearDupPairsFromSets(
-      apngFrameHashSets(media, thumbSide).localCheckpoint(),
-      minMatchedFrames, maxFrameDf, maxFrameHamming, maxBucketDf,
-      minLisFrac)
-
-  /** Per-animated-WebP composited frame-hash sets over
-    * [[Webp.frames]] (VP8L frames through the from-spec codec); a
-    * still WebP contributes its single frame. */
-  def awebpFrameHashSets(media: DataFrame, thumbSide: Int = 8,
-      skipMalformed: Boolean = true): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("bytes")).as[VideoRow].mapPartitions { it =>
-      it.flatMap { m =>
-        try {
-          val (w, h, fs) = Webp.frames(m.bytes)
-          val (hashes, pos) = distinctFrameHashes(
-            fs.iterator.map { case (_, rgb) => rgbThumb(rgb, w, h, thumbSide) })
-          Iterator.single((m.media_id, hashes, pos))
-        } catch {
-          case e: Exception if skipMalformed => Iterator.empty
-          case e: Exception => throw new RuntimeException(
-            s"malformed animated webp for media_id ${m.media_id}", e)
-        }
-      }
-    }.toDF("media_id", "frame_hashes", "frame_pos")
-  }
-
-  /** Animated-WebP near-dup pairs (round 18) — the same one-body
-    * delegation as [[gifNearDupPairs]]/[[apngNearDupPairs]]. */
-  def awebpNearDupPairs(media: DataFrame, minMatchedFrames: Int = 2,
-      maxFrameDf: Int = 1000, thumbSide: Int = 8,
-      maxFrameHamming: Int = 3, maxBucketDf: Int = 1000,
-      minLisFrac: Double = 0.0): DataFrame =
-    videoNearDupPairsFromSets(
-      awebpFrameHashSets(media, thumbSide).localCheckpoint(),
+      animationFrameHashSets(media, thumbSide).localCheckpoint(),
       minMatchedFrames, maxFrameDf, maxFrameHamming, maxBucketDf,
       minLisFrac)
 
@@ -4343,9 +3884,8 @@ object Multimodal {
   /** [[videoFrameIndex]] from an ALREADY-COMPUTED frame-hash-set frame
     * (round 18, public): the frame space is FORMAT-AGNOSTIC — the same
     * (media_id, frame_hashes, frame_pos) contract comes out of
-    * [[videoFrameHashSets]] (Y4M), [[gifFrameHashSets]],
-    * [[apngFrameHashSets]] and [[awebpFrameHashSets]] — so an
-    * animation corpus frozen from ANY container matches probes from
+    * [[videoFrameHashSets]] (Y4M) and [[animationFrameHashSets]]
+    * (GIF / APNG / animated WebP) — so an animation corpus frozen from ANY container matches probes from
     * any other: a GIF transcoded to animated WebP shares its
     * composited frame hashes exactly (the m_anim_xformat gate). */
   def videoFrameIndexFromSets(sets: DataFrame, maxFrameDf: Int = 1000,

@@ -610,7 +610,7 @@ object Vp8l {
     // its 14-bit header dims is therefore structurally impossible to
     // fill and must refuse BEFORE the w*h raster (and transform
     // sub-image) allocations, not after — ungated decode paths
-    // (decodeWebpImages / decodeAnyImages without mediaMetaGate) hit
+    // (decodeAnyImages without mediaMetaGate) hit
     // this allocation directly per blob.
     if (w.toLong * h > length.toLong * 8L * 2048L)
       fail(s"declared $w x $h exceeds the per-bit pixel ceiling " +

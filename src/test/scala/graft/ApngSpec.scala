@@ -193,16 +193,16 @@ class ApngSpec extends SparkSpec {
     val media = Multimodal.xformatAnimMediaFromDocuments(docs)
       .localCheckpoint()
     val index = Multimodal.videoFrameIndexFromSets(
-      Multimodal.gifFrameHashSets(media.filter(
+      Multimodal.animationFrameHashSets(media.filter(
         col("media_id") % 4 === 0 || col("media_id") % 4 === 3)))
       .localCheckpoint()
-    def probe(m: Long, sets: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      Multimodal.animationAgainstIndex(
-          sets(media.filter(col("media_id") % 4 === m)), index)
+    def probe(m: Long) =
+      Multimodal.animationAgainstIndex(Multimodal.animationFrameHashSets(
+          media.filter(col("media_id") % 4 === m)), index)
         .collect().map(r => (r.getLong(0), r.getLong(1)) ->
           ((r.getLong(2), r.getLong(3)))).toMap
-    val apng = probe(1L, Multimodal.apngFrameHashSets(_))
-    val awebp = probe(2L, Multimodal.awebpFrameHashSets(_))
+    val apng = probe(1L)
+    val awebp = probe(2L)
     for (g <- 0L until 4L) {
       val nf = 3 + g % 3
       assert(apng((g * 4 + 1, g * 4)) === ((nf, nf)), s"apng g=$g")
@@ -218,7 +218,7 @@ class ApngSpec extends SparkSpec {
     val trimmed = graft.ops.Png.encodeApng(w, h,
       fs.dropRight(1).map { case (_, rgb) => (4, rgb) })
     val trimMatch = Multimodal.animationAgainstIndex(
-        Multimodal.apngFrameHashSets(
+        Multimodal.animationFrameHashSets(
           Seq((5000L, trimmed)).toDF("media_id", "bytes")), index)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(trimMatch.toSeq === Seq((0L, fs.length - 1L, fs.length - 1L)))
@@ -229,10 +229,10 @@ class ApngSpec extends SparkSpec {
     for ((media, pairsOf) <- Seq(
         (Multimodal.apngDedupMediaFromDocuments(docs),
           (df: org.apache.spark.sql.DataFrame, f: Double) =>
-            Multimodal.apngNearDupPairs(df, minLisFrac = f)),
+            Multimodal.animationNearDupPairs(df, minLisFrac = f)),
         (Multimodal.awebpDedupMediaFromDocuments(docs),
           (df: org.apache.spark.sql.DataFrame, f: Double) =>
-            Multimodal.awebpNearDupPairs(df, minLisFrac = f)))) {
+            Multimodal.animationNearDupPairs(df, minLisFrac = f)))) {
       val pairs = pairsOf(media, 0.0)
         .select("id_a", "id_b", "n_matched", "lis").collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
@@ -259,12 +259,12 @@ class ApngSpec extends SparkSpec {
       (4, rgb) })
     val withRev = media.unionByName(
       Seq((1000L, rev)).toDF("media_id", "bytes"))
-    val revPairs = Multimodal.apngNearDupPairs(withRev)
+    val revPairs = Multimodal.animationNearDupPairs(withRev)
       .filter(col("id_b") === 1000L)
       .select("id_a", "n_matched", "lis").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(revPairs(0L) === ((3L, 1L)), "reversed animation: full match, lis 1")
-    assert(Multimodal.apngNearDupPairs(withRev, minLisFrac = 0.8)
+    assert(Multimodal.animationNearDupPairs(withRev, minLisFrac = 0.8)
       .filter(col("id_b") === 1000L).count() === 0L,
       "the collage must not survive the keep policy")
   }

@@ -305,6 +305,60 @@ class ContainerMetaSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(rows === Map(1L -> (("audio", "mp3")),
       2L -> (("unknown", "unknown")), 3L -> (("unknown", "unknown"))))
+
+    // every MediaFormat entry, one encoded blob each, plus the edge
+    // blobs: all three dispatches — the Scala-side sniff, the native
+    // classifyMedia columns and the mediaMetadata pre-pass — agree on
+    // each blob's modality. A format added to the table without a blob
+    // here fails the coverage assert.
+    import graft.ops.{Flac, Gif, Jpeg, MediaFormat, Ogg, Png, Webp}
+    val rgb = Array.tabulate(4 * 4 * 3)(i => (i * 7).toByte)
+    val pcm = Array.tabulate(400)(i => ((i % 50) * 100).toShort)
+    val id3Flac = {
+      val out = new java.io.ByteArrayOutputStream()
+      out.write("ID3".getBytes("US-ASCII"), 0, 3)
+      out.write(4); out.write(0); out.write(0) // v2.4, no flags
+      out.write(Array[Byte](0, 0, 0, 20), 0, 4) // syncsafe size 20
+      out.write(new Array[Byte](20), 0, 20)
+      out.toByteArray ++ Flac.encode(22050, 1, 16, 22050L)
+    }
+    val blobs: Seq[(String, Array[Byte])] = Seq(
+      "jpeg" -> Jpeg.encodeGray(8, 8, Array.fill(64)(90.toByte)),
+      "png" -> Png.encode(4, 4, rgb),
+      "gif" -> Gif.encode(4, 4, Array.tabulate(12)(i => (i * 20).toByte),
+        Seq(Gif.EncFrame(Array.tabulate(16)(i => (i % 4).toByte)))),
+      "webp" -> Webp.encodeVp8lPixels(4, 4, Array.fill(16)(0xff336699)),
+      "ppm" -> Multimodal.Ppm.encode(4, 4, rgb),
+      "qoi" -> Multimodal.Qoi.encode(4, 4, rgb),
+      "mp3" -> Mp3.encodeFrames(3, 1, _ => 9, 0, nFrames = 2),
+      "flac" -> Flac.encodePcm(16000, 1, 16, pcm.map(_.toInt)),
+      "ogg" -> Ogg.encode("vorbis", 44100, 1, 44100L),
+      "wav" -> Multimodal.Wav.encode(16000, pcm),
+      "mp4" -> Mp4.encode("isom", 0L, 600L, 1200L, video = Some("avc1"),
+        audio = Some("mp4a"), mdatLen = 20, seed = 1L),
+      "y4m" -> Multimodal.Y4m.encode(4, 4, 25,
+        Seq(Array.fill(4 * 4 * 3 / 2)(77.toByte))),
+      "id3-tagged flac" -> id3Flac,
+      "bare-RIFF AVI" -> avi,
+      "reserved mp3 sync" -> reserved,
+      "1-byte blob" -> Array[Byte](0x47))
+    val sniffed = blobs.map { case (_, b) => MediaFormat.sniff(b) }
+    assert(sniffed.take(MediaFormat.all.length).map(_.map(_.name)) ===
+      MediaFormat.all.map(f => Some(f.name)),
+      "one blob per table entry, in table order")
+    assert(sniffed.drop(MediaFormat.all.length).map(_.map(_.name)) ===
+      Seq(Some("flac"), None, None, None))
+    val all = blobs.zipWithIndex.map { case ((_, b), i) => (i.toLong, b) }
+      .toDF("media_id", "bytes")
+    val native = Multimodal.classifyMedia(all).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    val pre = Multimodal.mediaMetadata(all, skipMalformed = false).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    blobs.zip(sniffed).zipWithIndex.foreach { case (((name, _), fmt), i) =>
+      val scala = fmt.fold("unknown")(_.modality)
+      assert(native(i.toLong) === scala, s"classifyMedia vs sniff: $name")
+      assert(pre(i.toLong) === scala, s"mediaMetadata vs sniff: $name")
+    }
   }
 
   test("the meta gate classifies junk at header cost and gated junk is NEVER pixel-decoded (accumulator-proven)") {

@@ -157,7 +157,7 @@ class GifSpec extends SparkSpec {
     import spark.implicits._
     val docs = (0L until 16L).toDF("doc_id")
     val media = graft.ops.Multimodal.gifDedupMediaFromDocuments(docs)
-    val pairs = graft.ops.Multimodal.gifNearDupPairs(media)
+    val pairs = graft.ops.Multimodal.animationNearDupPairs(media)
       .select("id_a", "id_b", "n_matched", "lis").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
@@ -188,12 +188,12 @@ class GifSpec extends SparkSpec {
     val withRev = media.unionByName(Seq(
       (1000L, graft.ops.Gif.encode(w, h, pal, revFrames)))
       .toDF("media_id", "bytes"))
-    val rev = graft.ops.Multimodal.gifNearDupPairs(withRev)
+    val rev = graft.ops.Multimodal.animationNearDupPairs(withRev)
       .filter(col("id_b") === 1000L)
       .select("id_a", "n_matched", "lis").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rev(0L) === ((3L, 1L)), "reversed animation: full match, lis 1")
-    val temporal = graft.ops.Multimodal.gifNearDupPairs(withRev,
+    val temporal = graft.ops.Multimodal.animationNearDupPairs(withRev,
         minLisFrac = 0.8)
       .filter(col("id_b") === 1000L).count()
     assert(temporal === 0L, "the collage must not survive the keep policy")

@@ -491,7 +491,7 @@ class JpegSpec extends SparkSpec {
 
   test("jpegMediaFromDocuments decodes to the closed-form channel means (the m_jpeg oracle, in-process)") {
     val docs = (0L until 60L).toDF("doc_id")
-    val dec = Multimodal.decodeJpegImages(
+    val dec = Multimodal.decodeAnyImages(
         Multimodal.jpegMediaFromDocuments(docs), thumbSide = 2)
       .select("media_id", "width", "height", "mean_r", "mean_g", "mean_b")
       .collect().map(r => r.getLong(0) ->

@@ -1261,7 +1261,7 @@ class MultimodalSpec extends SparkSpec {
     val docs = TestSpark.spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     val imgs = Multimodal.qoiMediaFromDocuments(docs)
-    val dec = Multimodal.decodeQoiImages(imgs, thumbSide = 2)
+    val dec = Multimodal.decodeAnyImages(imgs, thumbSide = 2)
     assert(dec.count() === 50)
     val r0 = dec.orderBy("media_id").head()
     val (w, h) = (r0.getAs[Int]("width"), r0.getAs[Int]("height"))
@@ -1275,9 +1275,9 @@ class MultimodalSpec extends SparkSpec {
     // malformed blobs skipped, loud on request
     val bad = imgs.limit(1).union(
       Seq((999L, "nope".getBytes)).toDF("media_id", "bytes"))
-    assert(Multimodal.decodeQoiImages(bad).count() === 1)
+    assert(Multimodal.decodeAnyImages(bad).count() === 1)
     assertThrows[org.apache.spark.SparkException](
-      Multimodal.decodeQoiImages(bad, skipMalformed = false).collect())
+      Multimodal.decodeAnyImages(bad, skipMalformed = false).collect())
   }
 
   test("real PPM decode: encode→decode round-trips, stats and thumbnail exact") {
@@ -1291,7 +1291,7 @@ class MultimodalSpec extends SparkSpec {
     assert(raster.toSeq === rgb.toSeq)
 
     val df = Seq((1L, bytes)).toDF("media_id", "bytes")
-    val dec = Multimodal.decodeImages(df, thumbSide = 2).head()
+    val dec = Multimodal.decodeAnyImages(df, thumbSide = 2).head()
     assert(dec.getAs[Int]("width") === 2 && dec.getAs[Int]("height") === 2)
     assert(dec.getAs[Double]("mean_r") === (255.0 + 0 + 0 + 255) / 4)
     assert(dec.getAs[Double]("mean_g") === (0.0 + 255 + 0 + 255) / 4)
@@ -1391,16 +1391,16 @@ class MultimodalSpec extends SparkSpec {
     val bad = "P6\n2 1\n255\nxx".getBytes // truncated raster
     val notPpm = "GIF89a".getBytes
     val df = Seq((1L, good), (2L, bad), (3L, notPpm)).toDF("media_id", "bytes")
-    val kept = Multimodal.decodeImages(df).select("media_id").collect().map(_.getLong(0))
+    val kept = Multimodal.decodeAnyImages(df).select("media_id").collect().map(_.getLong(0))
     assert(kept.toSeq === Seq(1L))
     assertThrows[org.apache.spark.SparkException](
-      Multimodal.decodeImages(df, skipMalformed = false).collect())
+      Multimodal.decodeAnyImages(df, skipMalformed = false).collect())
   }
 
   test("document-synthesized PPM corpus decodes end to end") {
     val imgs = Multimodal.ppmMediaFromDocuments(
       TestSpark.spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(100))
-    val dec = Multimodal.decodeImages(imgs, thumbSide = 2)
+    val dec = Multimodal.decodeAnyImages(imgs, thumbSide = 2)
     assert(dec.count() === 100)
     val r = dec.orderBy("media_id").head()
     assert(r.getAs[Int]("width") >= 4 && r.getAs[Int]("height") >= 3)
@@ -1543,12 +1543,15 @@ class ImageDedupSpec extends SparkSpec {
     val mixed = Multimodal.decodeAnyImages(media, thumbSide = 8)
       .select("media_id", "mean_r").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val perFmt = (Multimodal.decodeImages(
-        media.filter(col("fmt") === "ppm"), thumbSide = 8)
-      .unionByName(Multimodal.decodeQoiImages(
-        media.filter(col("fmt") === "qoi"), thumbSide = 8)))
-      .select("media_id", "mean_r").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // each blob through its own format's codec, in-process
+    val perFmt = media.select("media_id", "fmt", "bytes").collect().map { r =>
+      val b = r.getAs[Array[Byte]](2)
+      val (w, h, raster) =
+        if (r.getString(1) == "ppm") Multimodal.Ppm.decode(b)
+        else Multimodal.Qoi.decode(b)
+      val sumR = raster.indices.by(3).map(i => (raster(i) & 0xff).toLong).sum
+      r.getLong(0) -> sumR / (w * h).toDouble
+    }.toMap
     assert(mixed === perFmt && mixed.size === 40)
   }
 

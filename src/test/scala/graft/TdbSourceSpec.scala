@@ -639,4 +639,72 @@ class TdbSourceSpec extends SparkSpec {
     assert(spark.read.format("tdb").load(out)
       .select("f1").head().getString(0) === "new-value")
   }
+
+  // The two tests below are the graft-only halves of TdbInteropSpec's
+  // cross-engine fixtures (that suite cancels without the reference
+  // binary; these properties involve graft alone).
+
+  test("what you write you get back: length-0, 1 MB and NUL-bearing values round-trip through TdbWriter (c-tests/what_you_write_you_get_back.c:22-83)") {
+    // the reference's fixture: value lengths {0, 1, 2, 1000, 1_000_000}
+    // of one repeated byte per (trail, field), uuid bytes = the trail
+    // ordinal repeated, 3 events per trail at time = ordinal — plus a
+    // sixth trail whose values embed NUL bytes (a value "may contain
+    // NUL/binary": the v1 lexicon is offset-delimited). All bytes stay
+    // < 0x80 so UTF-8 string transport is byte-identity.
+    val lengths = Seq(0, 1, 2, 1000, 1000000)
+    def rep(b: Int, n: Int): String = b.toChar.toString * n
+    val perTrail: Seq[(String, Seq[(String, String, String)])] =
+      lengths.zipWithIndex.map { case (len, i) =>
+        (f"$i%02x" * 16,
+          Seq.fill(3)((rep(i, len), rep(i + 10, len), rep(i + 20, len))))
+      } :+ (("05" * 16), Seq.fill(3)(("x\u0000y", "\u0000\u0000", "\u0000abc")))
+    val rows = perTrail.zipWithIndex.flatMap { case ((u, evs), i) =>
+      evs.zipWithIndex.map { case ((a, b, c), j) =>
+        (u, i.toLong, j.toLong, a, b, c)
+      }
+    }
+    val dir = Files.createTempDirectory("graft-tdb-wywgb")
+    val pkg = s"$dir/big.tdb"
+    TdbWriter.writePackage(rows.toDF("uuid", "time", "seq", "a", "b", "c"),
+      Seq("a", "b", "c"), pkg)
+    // the reader returns the identical values (NULL ≡ "": a length-0
+    // value and an absent one share the empty lexicon entry)
+    val back = spark.read.format("tdb").load(pkg)
+      .select(col("uuid"), col("time"),
+        coalesce(col("a"), lit("")).as("a"),
+        coalesce(col("b"), lit("")).as("b"),
+        coalesce(col("c"), lit("")).as("c"))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2),
+        r.getString(3), r.getString(4))).sortBy(t => (t._1, t._2)).toSeq
+    val want = rows.map(t => (t._1, t._2, t._4, t._5, t._6))
+      .sortBy(t => (t._1, t._2))
+    assert(back.length === want.length)
+    assert(back === want, "reader diverges on the edge-value corpus")
+    assert(back.exists(_._3.length == 1000000) &&
+      back.exists(_._4.contains('\u0000')))
+  }
+
+  test("value-id boundary reverts a1→a2→a3→a2 round-trip through TdbWriter (off_by_one_encoding_bug.c)") {
+    // single-event trails whose second field walks a1→a2→a3 with
+    // REVERTS (a3→a2) under a constant first field — the value-id
+    // boundary pattern the reference's historic encode bug corrupted.
+    // uuid = memcpy(&i, 4) little-endian.
+    val events = Seq((0, "a1"), (10, "a1"), (100, "a1"), (200, "a2"),
+      (300, "a2"), (400, "a3"), (500, "a2"), (600, "a3"), (700, "a2"))
+    val rows = events.zipWithIndex.map { case ((t, v), i) =>
+      (f"$i%02x" + "00" * 15, t.toLong, "cli", v)
+    }
+    val dir = Files.createTempDirectory("graft-tdb-ob1")
+    val pkg = s"$dir/ob1.tdb"
+    TdbWriter.writePackage(
+      rows.toDF("uuid", "time", "a", "b")
+        .withColumn("seq", monotonically_increasing_id()),
+      Seq("a", "b"), pkg)
+    val g = spark.read.format("tdb").load(pkg)
+      .select("uuid", "time", "a", "b").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2),
+        r.getString(3))).sortBy(t => (t._1, t._2)).toSeq
+    assert(g === rows, "reader diverges on the off-by-one fixture")
+  }
 }
